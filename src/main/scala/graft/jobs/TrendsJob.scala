@@ -46,15 +46,19 @@ object TrendsJob {
     KeyedPartitionSink.assembleDocs(result, p.listId, p.sinceDate, statusType)
   }
 
-  /** Full daily run (EP1): all active passes unioned with their type
-    * discriminator (SURVEY §2.7) and written through the idempotent
-    * partitioned sink in one shot. */
-  def run(t: TrendsTables, cfg: Config): Unit = {
-    val docs = activePasses(cfg.distinctSourcesOnly)
+  /** All active passes' docs unioned with their type discriminator
+    * (SURVEY §2.7). */
+  def docs(t: TrendsTables, cfg: Config): DataFrame =
+    activePasses(cfg.distinctSourcesOnly)
       .map { case (st, ds, rt) => runPass(t, cfg, st, ds, rt) }
       .reduce(_ union _)
-    KeyedPartitionSink.write(docs, cfg.sinkPath, dryRun = cfg.dryRun)
-  }
+
+  /** Full daily run (EP1): [[docs]] written through the idempotent
+    * partitioned sink in one shot, with at most `maxWriteTasks` write tasks
+    * (1 ≙ the reference's `-in-parallel=false`, R4). */
+  def run(t: TrendsTables, cfg: Config, maxWriteTasks: Int = 100): Unit =
+    KeyedPartitionSink.write(docs(t, cfg), cfg.sinkPath, dryRun = cfg.dryRun,
+      maxWriteTasks = maxWriteTasks)
 
   /**
    * The north star's full JDBC lifecycle: five tables read over JDBC
@@ -66,12 +70,9 @@ object TrendsJob {
   def runOverJdbc(spark: org.apache.spark.sql.SparkSession,
                   source: graft.sources.JdbcSource.JdbcConfig,
                   cfg: Config, sinkUrl: String, sinkTable: String): Unit = {
-    val t = graft.sources.JdbcSource.trendsTables(spark, source)
-    val docs = activePasses(cfg.distinctSourcesOnly)
-      .map { case (st, ds, rt) => runPass(t, cfg, st, ds, rt) }
-      .reduce(_ union _)
-    if (cfg.dryRun) { docs.explain("formatted"); return }
-    graft.sink.JdbcUpsertSink.write(docs, sinkUrl, sinkTable,
+    val out = docs(graft.sources.JdbcSource.trendsTables(spark, source), cfg)
+    if (cfg.dryRun) { out.explain("formatted"); return }
+    graft.sink.JdbcUpsertSink.write(out, sinkUrl, sinkTable,
       Seq(Seq("list_id" -> cfg.params.listId,
         "ingest_date" -> cfg.params.sinceDate)))
   }

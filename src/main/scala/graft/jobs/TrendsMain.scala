@@ -1,9 +1,11 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
+import graft.model.Schemas
 import graft.queries.HighlightQueries.{Params, TrendsTables}
-import graft.sources.JdbcSource
+import graft.sources.{DeclaredParquet, JdbcSource}
 import graft.sources.JdbcSource.JdbcConfig
 
 /**
@@ -52,13 +54,20 @@ object TrendsMain {
     page = opts.getOrElse("page", "0").toInt,
     sinceLastWeek = opts.contains("since-last-week"))
 
-  def loadParquetTables(spark: SparkSession, dir: String): TrendsTables =
+  /** The five tables of a parquet dir, each read with its declared
+    * `Schemas` struct: no Spark job infers a schema, and a table whose
+    * files lack a declared column or hold it at another type raises here,
+    * before any query runs (DeclaredParquet). */
+  def loadParquetTables(spark: SparkSession, dir: String): TrendsTables = {
+    def table(name: String, schema: StructType) =
+      DeclaredParquet.read(spark, s"$dir/$name.parquet", schema)
     TrendsTables(
-      weavingStatus = spark.read.parquet(s"$dir/weaving_status.parquet"),
-      highlight = spark.read.parquet(s"$dir/highlight.parquet"),
-      publishersList = spark.read.parquet(s"$dir/publishers_list.parquet"),
-      statusPopularity = spark.read.parquet(s"$dir/status_popularity.parquet"),
-      weavingUser = spark.read.parquet(s"$dir/weaving_user.parquet"))
+      weavingStatus = table("weaving_status", Schemas.weavingStatus),
+      highlight = table("highlight", Schemas.highlight),
+      publishersList = table("publishers_list", Schemas.publishersList),
+      statusPopularity = table("status_popularity", Schemas.statusPopularity),
+      weavingUser = table("weaving_user", Schemas.weavingUser))
+  }
 
   def run(spark: SparkSession, opts: Map[String, String]): Unit = {
     val cfg = TrendsJob.Config(
@@ -66,28 +75,20 @@ object TrendsMain {
       sinkPath = opts.getOrElse("sink-path", "trends_out"),
       distinctSourcesOnly = opts.contains("migrate-distinct-sources-only"),
       dryRun = opts.contains("dry-mode"))
+    // --in-parallel=false ⇒ sequential single-task write (R4)
+    val writeTasks = if (opts.get("in-parallel").contains("false")) 1 else 100
+    def jdbcSource(url: String) = JdbcConfig(url, opts.getOrElse("jdbc-driver",
+      "org.apache.derby.iapi.jdbc.AutoloadedDriver"))
     (opts.get("jdbc-url"), opts.get("sink-jdbc-table")) match {
       case (Some(url), Some(table)) =>
-        val src = JdbcConfig(url, opts.getOrElse("jdbc-driver",
-          "org.apache.derby.iapi.jdbc.AutoloadedDriver"))
-        TrendsJob.runOverJdbc(spark, src, cfg, url, table)
+        TrendsJob.runOverJdbc(spark, jdbcSource(url), cfg, url, table)
       case (Some(url), None) =>
-        val src = JdbcConfig(url, opts.getOrElse("jdbc-driver",
-          "org.apache.derby.iapi.jdbc.AutoloadedDriver"))
-        val t = JdbcSource.trendsTables(spark, src)
-        TrendsJob.run(t, cfg)
+        TrendsJob.run(JdbcSource.trendsTables(spark, jdbcSource(url)), cfg,
+          writeTasks)
       case (None, _) =>
         val dir = opts.getOrElse("tables-dir",
           sys.error("one of --tables-dir or --jdbc-url is required"))
-        val t = loadParquetTables(spark, dir)
-        // --in-parallel=false ⇒ sequential single-task write (R4)
-        val docs = TrendsJob.activePasses(cfg.distinctSourcesOnly)
-          .map { case (st, ds, rt) => TrendsJob.runPass(t, cfg, st, ds, rt) }
-          .reduce(_ union _)
-        val tasks =
-          if (opts.get("in-parallel").contains("false")) 1 else 100
-        graft.sink.KeyedPartitionSink.write(docs, cfg.sinkPath,
-          dryRun = cfg.dryRun, maxWriteTasks = tasks)
+        TrendsJob.run(loadParquetTables(spark, dir), cfg, writeTasks)
     }
   }
 

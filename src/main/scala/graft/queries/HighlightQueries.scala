@@ -74,15 +74,37 @@ object HighlightQueries {
       col("usr_twitter_username") === col("screen_name"))
 
   /** Same-day popularity samples aligned to the highlight's publication day
-    * (J5, trends.go:396-399). */
-  private def popularityJoined(t: TrendsTables): DataFrame = {
-    val p = t.statusPopularity.select(
+    * (J5, trends.go:396-399).
+    *
+    * `pinDay` is the publication day the pass already pins, if any; the
+    * samples are then filtered to that day before the join. The filter is
+    * exact: the join's `p_day = dayBucket(publication_date_time)` already
+    * forces every joined sample into that day. Unlike that join condition it
+    * is a range on the bare `checked_at`, so it reaches the scan's
+    * PushedFilters: a JDBC database returns one day's samples, parquet
+    * skips the row groups whose `checked_at` statistics miss the day, and
+    * the join's build side holds one day's samples instead of the whole
+    * table. See [[publicationDay]] for which passes pin. */
+  private def popularityJoined(t: TrendsTables, pinDay: Option[String]): DataFrame = {
+    val samples = pinDay.fold(t.statusPopularity)(day =>
+      t.statusPopularity.filter(dayBucketEquals(col("checked_at"), day)))
+    val p = samples.select(
       col("status_id").as("p_status_id"),
       col("checked_at").as("p_checked_at"),
       col("total_retweets").as("p_total_retweets"),
       col("total_favorites").as("p_total_favorites"))
     p.withColumn("p_day", dayBucket(col("p_checked_at")))
   }
+
+  /** The publication day a pass pins, to which [[popularityJoined]] can pin
+    * the samples. The curated base (and its count) filters
+    * `publication_date_time` to the day in every mode. The distinct-sources
+    * passes (and their count) align it to the day only in the `sinceWhen`
+    * day branch: in week mode the highlight join keeps any publication day
+    * inside the window, so the samples of every such day must stay and the
+    * popularity side stays unpinned. */
+  private def publicationDay(p: Params, distinctSources: Boolean): Option[String] =
+    if (distinctSources && p.sinceLastWeek) None else Some(p.sinceDate)
 
   /**
    * Curated-highlights query (trends.go:279-334, 394-406): INNER join tree
@@ -109,7 +131,7 @@ object HighlightQueries {
         deletedMembers(t).select(col("usr_id")),
         col("member_id"), col("usr_id"))
 
-    val pop = popularityJoined(t)
+    val pop = popularityJoined(t, publicationDay(p, distinctSources = false))
     val withPop = joined.join(pop, // J5 temporal alignment
       col("p_status_id") === col("status_id") &&
         col("p_day") === dayBucket(col("publication_date_time")),
@@ -196,7 +218,7 @@ object HighlightQueries {
           authorTwitterId(col("ust_api_document")), col("del_tid"))
       else listJoined
 
-    val pop = popularityJoined(t)
+    val pop = popularityJoined(t, publicationDay(p, distinctSources = true))
     val withPop = excluded.join(pop,
       col("p_status_id") === col("status_id") &&
         col("p_day") === dayBucket(col("publication_date_time")),
@@ -257,7 +279,7 @@ object HighlightQueries {
    */
   def countHighlights(t: TrendsTables, p: Params,
                       distinctSources: Boolean): DataFrame = {
-    val pop = popularityJoined(t)
+    val pop = popularityJoined(t, publicationDay(p, distinctSources))
     if (!distinctSources) {
       t.highlight
         .filter(dayBucketEquals(col("publication_date_time"), p.sinceDate))

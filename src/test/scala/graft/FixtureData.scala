@@ -69,4 +69,14 @@ object FixtureData {
 
     TrendsTables(weavingStatus, highlight, publishersList, statusPopularity, weavingUser)
   }
+
+  /** Writes `t` as the `<table>.parquet` dirs `TrendsMain --tables-dir`
+    * reads. */
+  def writeParquet(t: TrendsTables, dir: String): Unit =
+    Seq("weaving_status" -> t.weavingStatus, "highlight" -> t.highlight,
+      "publishers_list" -> t.publishersList,
+      "status_popularity" -> t.statusPopularity,
+      "weaving_user" -> t.weavingUser).foreach { case (name, df) =>
+      df.write.parquet(s"$dir/$name.parquet")
+    }
 }

@@ -102,4 +102,17 @@ class HighlightQueriesSpec extends SparkSpec {
       .collect().head.getLong(0)
     assert(distinct === 8)
   }
+
+  test("popularity scan over parquet: pinned to the day unless week-mode distinct") {
+    withTempDirs("pop-pin") { case Seq(dir) =>
+      FixtureData.writeParquet(t, dir)
+      val onDisk = graft.jobs.TrendsMain.loadParquetTables(spark, dir)
+      PopularityScan.assertPins(onDisk, base)
+      // the pin is exact: same rows as the in-memory tables
+      assert(HighlightQueries.curatedHighlights(onDisk, base).collect().toSeq ===
+        HighlightQueries.curatedHighlights(t, base).collect().toSeq)
+      assert(HighlightQueries.countHighlights(onDisk, base, distinctSources = true)
+        .collect().head.getLong(0) === 8)
+    }
+  }
 }

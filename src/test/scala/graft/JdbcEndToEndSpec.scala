@@ -2,6 +2,8 @@ package graft
 
 import java.sql.DriverManager
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.jobs.TrendsJob
@@ -98,6 +100,37 @@ class JdbcEndToEndSpec extends SparkSpec {
     TrendsJob.runOverJdbc(spark, cfg, jobCfg, url, "sink_docs")
     val second = JdbcSource.table(spark, cfg, "sink_docs").collect()
     assert(second.length === first.length)
+  }
+
+  test("popularity scan over JDBC: pinned to the day unless week-mode distinct") {
+    db
+    PopularityScan.assertPins(JdbcSource.trendsTables(spark, cfg),
+      Params(sinceDate = FixtureData.D, listId = "LIST", limit = -1))
+  }
+
+  test("JDBC tables into the parquet sink: --in-parallel=false writes one file a partition") {
+    db
+    // without coalescing, each pass's sort leaves several partitions, so
+    // a bounded write is what keeps one file a partition
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try withTempDirs("trends-sink") { case Seq(out) =>
+      graft.jobs.TrendsMain.run(spark, graft.jobs.TrendsMain.parseArgs(Array(
+        s"--since-date=${FixtureData.D}", "--publishers-list-id=LIST",
+        s"--jdbc-url=$url", s"--sink-path=$out/docs", "--limit=-1",
+        "--in-parallel=false")))
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+      val parts =
+        try st.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+          .toSeq.groupBy(_.getParent)
+        finally st.close()
+      assert(parts.size === 3, parts.keys) // one partition per pass type
+      assert(parts.values.forall(_.size == 1), parts)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("streaming daily counts upsert over JDBC: per-group scope, no dups") {

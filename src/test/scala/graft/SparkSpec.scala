@@ -7,6 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all specs (one JVM-wide session, Spark-style). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` with one fresh temp dir per prefix, all deleted afterwards
+    * whether `body` passes or throws. */
+  def withTempDirs[A](prefixes: String*)(body: Seq[String] => A): A = {
+    val dirs = prefixes.map(p => java.nio.file.Files.createTempDirectory(p).toFile)
+    try body(dirs.map(_.toString))
+    finally dirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+  }
 }
 
 object SparkSpec {
