@@ -47,18 +47,40 @@ import org.apache.spark.sql.SparkSession
  * with every query that finished — r3 lost its whole bench artifact to an
  * all-or-nothing write that survived the driver's timeout by 0.2 s.
  * Per-query timings also stream to stderr as they complete.
+ *
+ * Failures: a query whose measured pass throws is listed under `"failed"`
+ * and kept out of `queries` and the total — the time to a failure is not
+ * a timing.
  */
 object Bench {
 
-  /** The one-line JSON contract (+ the `partial` durability flag). Pure
-    * function of the results-so-far — spec'd parseable at every prefix. */
+  /** The one-line JSON contract (+ the `partial` durability flag and the
+    * `failed` query names). Pure function of the results-so-far — spec'd
+    * parseable at every prefix. */
   def resultsJson(results: Seq[(String, Double)], sfDir: String,
-                  partial: Boolean): String = {
+                  partial: Boolean, failed: Seq[String] = Nil): String = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
+    val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
-      s""""queries":$qs,"sf":"$sfDir","partial":$partial}"""
+      s""""queries":$qs,"failed":$fs,"sf":"$sfDir","partial":$partial}"""
+  }
+
+  /** Wall seconds of each of `passes` runs of `run` (`reset` after each,
+    * untimed), or None once a run throws: the rest are skipped and the
+    * time to a failure is never reported as a timing. */
+  def timePasses(name: String, passes: Int, reset: () => Unit)
+                (run: => Unit): Option[Seq[Double]] = {
+    val times = Iterator.continually {
+      val t0 = System.nanoTime()
+      try { run; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      } finally reset()
+    }.take(passes).takeWhile(_.isDefined).flatten.toSeq
+    Option.when(times.size == passes)(times)
   }
 
   /** Atomically replace `out` with `json` (temp file + ATOMIC_MOVE, falling
@@ -148,6 +170,7 @@ object Bench {
     val steady = math.max(0,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_STEADY", "0").toInt)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     ordered.foreach { case (name, fn) =>
       if (steady > 0) {
         var prev = Double.NaN
@@ -167,23 +190,19 @@ object Bench {
         }
         System.err.println(f"[bench] $name steady after $i pass(es), last $prev%.2f s")
       }
-      val times = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
+      timePasses(name, passes, () => spark.catalog.clearCache()) {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      } match {
+        case Some(times) =>
+          results += name -> times.min
+          System.err.println(f"[bench] $name ${times.min}%.3f s (passes: ${times.map(t => f"$t%.2f").mkString(",")})")
+        case None => failed += name
       }
-      results += name -> times.min
-      System.err.println(f"[bench] $name ${times.min}%.3f s (passes: ${times.map(t => f"$t%.2f").mkString(",")})")
-      try flush(out, resultsJson(results.toSeq, sfDir, partial = true))
+      try flush(out, resultsJson(results.toSeq, sfDir, partial = true, failed.toSeq))
       catch { case e: Throwable => System.err.println(s"[bench] flush $out failed: $e") }
     }
 
-    val json = resultsJson(results.toSeq, sfDir, partial = false)
+    val json = resultsJson(results.toSeq, sfDir, partial = false, failed.toSeq)
     println(json)
     // The driver captures a bounded TAIL of stdout: past ~110 queries the
     // full per-query line exceeds that window and arrives head-truncated
@@ -193,7 +212,8 @@ object Bench {
     // file (SPARK_GRAFT_BENCH_OUT).
     val total = results.map(_._2).sum
     println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
-      s""""n_queries":${results.size},"sf":"$sfDir","partial":false}""")
+      s""""n_queries":${results.size},"n_failed":${failed.size},""" +
+      s""""sf":"$sfDir","partial":false}""")
     try flush(out, json)
     catch { case e: Throwable => System.err.println(s"[bench] flush $out failed: $e") }
     spark.stop()

@@ -28,11 +28,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * per pass. Schema and spread verdict are functions of the FILES, not the
  * query, so [[load]] memoizes both per (session, path, file snapshot) and
  * hands the schema to the reader explicitly (plan-build drops to ~11 ms,
- * measured). The snapshot component (sizes + mtimes) keys the memo by
- * content identity — a regenerated table re-infers, exactly like
- * [[graft.queries.PairStore.snapshotFingerprint]]. This is metadata
- * caching only (what a catalog table gives you for free at 100 TB);
- * every query still computes from the parquet bytes.
+ * measured). The snapshot is [[graft.Artifacts.fingerprint]], so a
+ * regenerated table re-infers. This is metadata caching only (what a
+ * catalog table gives you for free at 100 TB); every query still computes
+ * from the parquet bytes.
  *
  * Tiny-dim escape (guide §2.4 "remove shuffles outright"): a broadcast-
  * class dimension (region/nation/supplier — single-digit KB) gains
@@ -67,33 +66,13 @@ object Tables {
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[String, TableMeta]()
 
-  /** Cheap content-identity stamp of a parquet path: immediate children's
-    * (name, size, mtime) for a directory, (size, mtime) for a file. */
-  private def snapshot(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) "absent"
-    else if (java.nio.file.Files.isRegularFile(p))
-      s"${java.nio.file.Files.size(p)}:" +
-        s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-    else {
-      val s = java.nio.file.Files.list(p)
-      try {
-        val b = Seq.newBuilder[String]
-        val it = s.iterator()
-        while (it.hasNext) {
-          val c = it.next()
-          b += s"${c.getFileName}:${java.nio.file.Files.size(c)}:" +
-            s"${java.nio.file.Files.getLastModifiedTime(c).toMillis}"
-        }
-        b.result().sorted.mkString(",")
-      } finally s.close()
-    }
-  }
+  /** Where table `name` of the data dir `dir` lives. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+    val path = this.path(dir, name)
     val key = spark.sparkContext.applicationId + "|" + path + "|" +
-      snapshot(path)
+      Artifacts.fingerprint(path)
     val meta = metaCache.computeIfAbsent(key, _ => {
       val df = spark.read.parquet(path)
       TableMeta(df.schema,

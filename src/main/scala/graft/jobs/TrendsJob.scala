@@ -34,8 +34,9 @@ object TrendsJob {
   def activePasses(distinctSourcesOnly: Boolean): Seq[(String, Boolean, Boolean)] =
     if (distinctSourcesOnly) passes.filter(_._2) .filter(!_._3) else passes
 
-  /** Run one pass: count (progress/limit clamp in the reference — A5), query,
-    * doc assembly. Returns the assembled docs ready for the sink. */
+  /** Build one pass: the pass's highlight query, assembled into docs ready
+    * for the sink. Runs no job and no count; the reference's progress count
+    * (A5) is [[HighlightQueries.countHighlights]], which no pass calls. */
   def runPass(t: TrendsTables, cfg: Config,
               statusType: String, distinctSources: Boolean,
               includeRetweets: Boolean): DataFrame = {

@@ -1,11 +1,11 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.{Artifacts, Tables}
 
 /**
  * IVF-style bucketed ANN storage: the embeddings table written PARTITIONED
@@ -18,11 +18,10 @@ import org.apache.spark.sql.functions._
  * At cluster scale the index build is a one-off job (one shuffle-free pass
  * adding the bucket column + a partitioned write) and queries are
  * O(corpus / 2^nPlanes · |ball|) scans. Locally the index is cached under
- * java.io.tmpdir, keyed by a CONTENT fingerprint of the source files
- * (names, sizes, mtimes): a changed source gets a fresh key, so a stale
- * index is never served, and two dirs can only share an index if their
- * contents are byte-date-identical. Concurrent first builds race safely —
- * each builds into a private temp dir and the first atomic rename wins.
+ * java.io.tmpdir across processes, keyed by the source table's
+ * [[graft.Artifacts.fingerprint]], so a changed source never serves a
+ * stale index. Concurrent first builds race safely — each builds into a
+ * private temp dir and the first atomic rename wins.
  */
 object BucketedAnn {
 
@@ -30,25 +29,10 @@ object BucketedAnn {
   val Dim = 64
   val Stride: Int = Dim / NPlanes
 
-  /** 128-bit hex fingerprint of the source table's file listing
-    * (name:size:mtime per file) — the index cache key. */
-  private[ops] def sourceFingerprint(dir: String): String = {
-    val src = Paths.get(dir, "embeddings.parquet")
-    val files: Seq[Path] =
-      if (Files.isDirectory(src))
-        Files.list(src).iterator().asScala.toSeq.sortBy(_.toString)
-      else Seq(src)
-    val sig = files.map { p =>
-      s"${p.getFileName}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
-    }.mkString("|")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$dir|$sig".getBytes("UTF-8"))
-      .take(16).map(b => f"$b%02x").mkString
-  }
-
   /** Deterministic local cache path for a source dir's index. */
   def indexPath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_ann_index_${sourceFingerprint(dir)}"
+    s"${sys.props("java.io.tmpdir")}/graft_ann_index_" +
+      Artifacts.fingerprint(Tables.path(dir, "embeddings"))
 
   /** Build (once) a bucket-partitioned copy of `embeddings` at `path`,
     * bucketed by `bucket` (any plan-time sign-LSH expression). */
@@ -56,7 +40,7 @@ object BucketedAnn {
                          bucket: org.apache.spark.sql.Column): String = {
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       val tmp = s"$path.build-${ProcessHandle.current().pid()}-${System.nanoTime()}"
-      graft.Tables.embeddings(spark, dir)
+      Tables.embeddings(spark, dir)
         .withColumn("sign_bucket", bucket.cast("int"))
         // co-locate each bucket before the partitioned write: ONE file per
         // bucket directory instead of one per (task × bucket) — a probe
@@ -69,7 +53,7 @@ object BucketedAnn {
         StandardCopyOption.ATOMIC_MOVE)
       catch { case _: java.nio.file.FileSystemException =>
         // a concurrent builder won the rename — use theirs, drop ours
-        deleteRecursively(Paths.get(tmp))
+        Artifacts.deleteRecursively(Paths.get(tmp))
       }
     }
     path
@@ -88,7 +72,8 @@ object BucketedAnn {
   /** Cache path of the ROTATED index: same content fingerprint, distinct
     * namespace per seed (a rotated and an axis index never alias). */
   def rotIndexPath(dir: String, seed: Long = RotSeed): String =
-    s"${sys.props("java.io.tmpdir")}/graft_ann_rot_${seed}_${sourceFingerprint(dir)}"
+    s"${sys.props("java.io.tmpdir")}/graft_ann_rot_${seed}_" +
+      Artifacts.fingerprint(Tables.path(dir, "embeddings"))
 
   /** Build (once) the seeded-rotation bucket-partitioned index — the
     * anisotropy-proof stored path: bucket bits mix every dimension through
@@ -121,11 +106,6 @@ object BucketedAnn {
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(k)
   }
-
-  private[ops] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
 
   /** The DataFrame over the bucketed index (sign_bucket is a partition col). */
   def indexed(spark: SparkSession, dir: String): DataFrame =

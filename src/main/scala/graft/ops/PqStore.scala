@@ -160,11 +160,12 @@ object PqStore {
   val DefaultParams: Params = Params(dim = 64, m = 4, codebookK = 16,
     nCells = 8)
 
-  /** Content-fingerprinted cache path (BucketedAnn's discipline: a
-    * changed source never serves a stale index). */
+  /** Cache path keyed by the embeddings table's
+    * [[graft.Artifacts.fingerprint]] (BucketedAnn's discipline: a changed
+    * source never serves a stale index). */
   def indexPath(dir: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_pq_index_" +
-      BucketedAnn.sourceFingerprint(dir)
+      graft.Artifacts.fingerprint(graft.Tables.path(dir, "embeddings"))
 
   /** Build (once) the stored index for `dir`'s embeddings table; races
     * resolve by atomic rename, first build wins. */
@@ -177,7 +178,7 @@ object PqStore {
       try Files.move(Paths.get(tmp), Paths.get(path),
         StandardCopyOption.ATOMIC_MOVE)
       catch { case _: java.nio.file.FileSystemException =>
-        BucketedAnn.deleteRecursively(Paths.get(tmp))
+        graft.Artifacts.deleteRecursively(Paths.get(tmp))
       }
     }
     path

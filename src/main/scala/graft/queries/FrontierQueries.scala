@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.ops.{Agreement, BitmapIndex, CountMin, GlobalIndex,
   RecordLinkage, Robust, Skyline, Spearman, WeightedSample}
 import graft.plans.{ConstraintCatalog, PkFkJoinElimination}
@@ -51,37 +51,19 @@ object FrontierQueries {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin
 
-  // one zoned-table-with-deletes build per (session, corpus) — the
-  // stored-artifact pattern (q112/q150): the layout + delete is the
+  // the zoned table with its deletes, stored once per session and
+  // documents snapshot ([[graft.Artifacts]]): the layout + delete is the
   // stored state, the query is the steady-state merge-on-read scan
-  private val delStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def deletedZonedPath(spark: SparkSession, dir: String): String =
-    delStore.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir + "|" +
-        PairStore.snapshotFingerprint(dir),
-      _ => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-zoned-del").toString
-        val docs = Tables.documents(spark, dir)
-        graft.sources.ZonedCorpus.write(docs, tmp,
-          expr("doc_id DIV 64"), Seq("doc_id", "n_chars"))
-        graft.sources.ZonedCorpus.deleteWhere(
-          docs.filter(expr("n_chars % 7 = 0")).select(col("doc_id")),
-          tmp)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          import scala.jdk.CollectionConverters._
-          val p = java.nio.file.Paths.get(tmp)
-          if (java.nio.file.Files.exists(p)) {
-            val s = java.nio.file.Files.walk(p)
-            try s.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists)
-            finally s.close()
-          }
-        }))
-        tmp
-      })
+    Artifacts.stored(spark, "zoned-del",
+        Seq(Tables.path(dir, "documents"))) { tmp =>
+      val docs = Tables.documents(spark, dir)
+      graft.sources.ZonedCorpus.write(docs, tmp,
+        expr("doc_id DIV 64"), Seq("doc_id", "n_chars"))
+      graft.sources.ZonedCorpus.deleteWhere(
+        docs.filter(expr("n_chars % 7 = 0")).select(col("doc_id")), tmp)
+      tmp
+    }
 
   /** q201 — EQUALITY DELETES, merge-on-read
     * ([[graft.sources.ZonedCorpus.deleteWhere]]): doc_ids with
@@ -456,34 +438,18 @@ object FrontierQueries {
       |WHERE hwm IS NULL OR y > hwm
       |ORDER BY x""".stripMargin
 
-  // one bloom-zoned layout per (session, corpus): hive-style category
-  // zones + per-zone equality blooms on `source`
-  private val bloomStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // the bloom-zoned layout (hive-style category zones + per-zone equality
+  // blooms on `source`), stored once per session and documents snapshot
+  // ([[graft.Artifacts]])
   private def bloomZonedPath(spark: SparkSession, dir: String): String =
-    bloomStore.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir + "|" +
-        PairStore.snapshotFingerprint(dir),
-      _ => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-zoned-bloom").toString
-        graft.sources.ZonedCorpus.write(
-          Tables.documents(spark, dir), tmp,
-          coalesce(col("source"), lit("null")),
-          Seq("doc_id", "n_chars"), bloomCols = Seq("source"))
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          import scala.jdk.CollectionConverters._
-          val p = java.nio.file.Paths.get(tmp)
-          if (java.nio.file.Files.exists(p)) {
-            val s = java.nio.file.Files.walk(p)
-            try s.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists)
-            finally s.close()
-          }
-        }))
-        tmp
-      })
+    Artifacts.stored(spark, "zoned-bloom",
+        Seq(Tables.path(dir, "documents"))) { tmp =>
+      graft.sources.ZonedCorpus.write(
+        Tables.documents(spark, dir), tmp,
+        coalesce(col("source"), lit("null")),
+        Seq("doc_id", "n_chars"), bloomCols = Seq("source"))
+      tmp
+    }
 
   /** q210 — zone BLOOM-FILTER pruning
     * ([[graft.sources.ZonedManifest]] blooms): min/max stats cannot
@@ -639,39 +605,23 @@ object FrontierQueries {
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
-  // one zoned REGION dim per (session, corpus) for the DSv2 join-elim
-  // gate — the tiny-dimension-as-stored-table shape BI stacks put behind
-  // every star join
-  private val zonedRegionStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // the zoned REGION dim for the DSv2 join-elim gate — the
+  // tiny-dimension-as-stored-table shape BI stacks put behind every star
+  // join — stored once per session and region snapshot
+  // ([[graft.Artifacts]])
   private def zonedRegionPath(spark: SparkSession, dir: String): String =
-    zonedRegionStore.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir + "|" +
-        PairStore.snapshotFingerprint(dir),
-      _ => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-zoned-region").toString
-        // long/string layout contract: key cast at WRITE time so the
-        // stored pk attribute joins bare (a Cast in the join condition
-        // would rightly veto the rewrite)
-        graft.sources.ZonedCorpus.write(
-          Tables.region(spark, dir).select(
-            col("r_regionkey").cast("long").as("r_regionkey"),
-            col("r_name")), tmp,
-          expr("r_regionkey DIV 2"), Seq("r_regionkey"))
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          import scala.jdk.CollectionConverters._
-          val p = java.nio.file.Paths.get(tmp)
-          if (java.nio.file.Files.exists(p)) {
-            val s = java.nio.file.Files.walk(p)
-            try s.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists)
-            finally s.close()
-          }
-        }))
-        tmp
-      })
+    Artifacts.stored(spark, "zoned-region",
+        Seq(Tables.path(dir, "region"))) { tmp =>
+      // long/string layout contract: key cast at WRITE time so the
+      // stored pk attribute joins bare (a Cast in the join condition
+      // would rightly veto the rewrite)
+      graft.sources.ZonedCorpus.write(
+        Tables.region(spark, dir).select(
+          col("r_regionkey").cast("long").as("r_regionkey"),
+          col("r_name")), tmp,
+        expr("r_regionkey DIV 2"), Seq("r_regionkey"))
+      tmp
+    }
 
   /** q216 — PK-FK join elimination over a DSv2 (ZonedSource) dimension
     * ([[graft.plans.PkFkJoinElimination]] extended past its round-9

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.ops.{Cdc, GlobalIndex, ZOrder, ZoneMap}
 import graft.sources.ZonedCorpus
 
@@ -88,35 +88,20 @@ object LakehouseQueries {
       |  SELECT * FROM loaded EXCEPT ALL SELECT * FROM src)
       |ORDER BY side, l_orderkey, l_partkey""".stripMargin
 
-  // one time-travel table per (session, corpus): v1 = even doc_ids,
-  // v2 = v1 + appended odd doc_ids — content-fingerprinted like the
-  // q150 zoned store
-  private val ttStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // the time-travel table, stored once per session and documents
+  // snapshot ([[graft.Artifacts]]): v1 = even doc_ids, v2 = v1 + appended
+  // odd doc_ids
   private def timeTravelPath(spark: SparkSession, dir: String): String =
-    ttStore.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + dir + "|" +
-        PairStore.snapshotFingerprint(dir),
-      _ => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-timetravel").toString
-        val docs = Tables.documents(spark, dir)
-          .select(col("doc_id"), col("source"), col("n_chars"))
-        ZonedCorpus.write(docs.filter(col("doc_id") % 2 === 0), tmp,
-          expr("n_chars DIV 64"), Seq("doc_id", "n_chars"))
-        ZonedCorpus.appendZones(docs.filter(col("doc_id") % 2 === 1), tmp,
-          expr("n_chars DIV 64"), Seq("doc_id", "n_chars"))
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-              .iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists)
-          } catch { case _: Throwable => () }
-        }))
-        tmp
-      })
+    Artifacts.stored(spark, "timetravel",
+        Seq(Tables.path(dir, "documents"))) { tmp =>
+      val docs = Tables.documents(spark, dir)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+      ZonedCorpus.write(docs.filter(col("doc_id") % 2 === 0), tmp,
+        expr("n_chars DIV 64"), Seq("doc_id", "n_chars"))
+      ZonedCorpus.appendZones(docs.filter(col("doc_id") % 2 === 1), tmp,
+        expr("n_chars DIV 64"), Seq("doc_id", "n_chars"))
+      tmp
+    }
 
   /** q196 — snapshot TIME TRAVEL over the zoned table format: the
     * corpus is written as snapshot v1 (even doc_ids), then the odd half

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.ops.{CacheScope, DataQuality, Trend, ZoneMap}
 
 /**
@@ -223,40 +223,23 @@ object MonitorQueries {
       |WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.94
       |ORDER BY key_a, key_b""".stripMargin
 
-  // one zoned-layout write per (session, corpus) — the q112/PairStore
-  // materialized-artifact pattern; the layout is the stored table, the
-  // query is the steady-state read
-  private val zonedStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // the zoned layout, stored once per session and documents snapshot
+  // ([[graft.Artifacts]]): the layout is the stored table, the query is
+  // the steady-state read (a layout built from an old snapshot would make
+  // the metadata-only q181 answer stale)
   private def zonedPath(spark: SparkSession, dir: String): String =
-    zonedStore.computeIfAbsent(
-      // content-fingerprinted like PairStore: regenerating the documents
-      // parquet in-session must never serve a layout built from the old
-      // snapshot (the metadata-only q181 would silently answer stale)
-      spark.sparkContext.applicationId + "|" + dir + "|" +
-        PairStore.snapshotFingerprint(dir),
-      _ => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-zoned").toString
-        graft.sources.ZonedCorpus.write(
-          Tables.documents(spark, dir), tmp,
-          expr("n_chars DIV 64"), Seq("doc_id", "n_chars"))
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-              .iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists)
-          } catch { case _: Throwable => () }
-        }))
-        tmp
-      })
+    Artifacts.stored(spark, "zoned",
+        Seq(Tables.path(dir, "documents"))) { tmp =>
+      graft.sources.ZonedCorpus.write(
+        Tables.documents(spark, dir), tmp,
+        expr("n_chars DIV 64"), Seq("doc_id", "n_chars"))
+      tmp
+    }
 
   /** q150 — zone-map-pruned scan through the custom DataSourceV2
     * connector ([[graft.sources.ZonedSource]]): documents re-laid-out
-    * into n_chars zones of 64 (one-time artifact, session-memoized like
-    * q112's buckets), then the steady-state read — a length-band slice
+    * into n_chars zones of 64 (a stored artifact, `zonedPath`),
+    * then the steady-state read — a length-band slice
     * aggregated per source — planned through the manifest so only the
     * 2 overlapping zones of 9 are ever opened (ZonedSourceSpec asserts
     * the partition count; this gate asserts the rows). The oracle reads

@@ -2,19 +2,18 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.ops.Dedup
 
 /**
- * Session-memoized materialization of the STANDARD near-dup pair table
- * (bigram MinHash-LSH, k=64/bands=16, J ≥ 0.5, exact-verified — the q26
- * contract): in a production corpus warehouse the dedup pair table is a
- * materialized artifact computed once per corpus snapshot, which every
+ * The STANDARD near-dup pair table (bigram MinHash-LSH, k=64/bands=16,
+ * J ≥ 0.5, exact-verified — the q26 contract), stored once per session and
+ * documents snapshot through [[graft.Artifacts]]: in a production corpus
+ * warehouse the dedup pair table is a materialized artifact, which every
  * downstream report (clustering q43, degree census q92, provenance q126,
- * canonicalization q129, token accounting q133, reach census q138) READS
- * rather than recomputes — exactly like q39's stored LSH index and q112's
- * bucketed tables. The first consumer in a session pays the pair-engine
- * run and a parquet write to a temp path; the rest pay a scan of a
+ * canonicalization q129, token accounting q133, reach census q138, …)
+ * READS rather than recomputes. The first consumer in a session pays the
+ * pair-engine run and a parquet write; the rest pay a scan of a
  * few-hundred-row table.
  *
  * q26 itself keeps calling the live engine — it gates the pair
@@ -24,52 +23,14 @@ import graft.ops.Dedup
  */
 object PairStore {
 
-  private val store =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def write(spark: SparkSession, dir: String): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pairs").toString
-    val path = s"$tmp/pairs"
-    val pairs = Dedup.minhashLshPairs(Tables.documents(spark, dir),
-      "doc_id", "text", n = 2, k = 64, bands = 16, threshold = 0.5)
-    try pairs.write.mode("overwrite").parquet(path)
-    finally pairs.unpersist(blocking = false)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator()
-          .asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists)
-      } catch { case _: Throwable => () }
-    }))
-    path
-  }
-
-  /** Fingerprint of the documents table's on-disk snapshot: every file's
-    * relative path, length and mtime under `dir`/documents.parquet (or the
-    * single file itself). Regenerating the parquet in-session changes the
-    * fingerprint, so the memo can never serve pairs computed from a stale
-    * snapshot — the cache is keyed by CONTENT IDENTITY, not by path. */
-  private[queries] def snapshotFingerprint(dir: String): String = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(dir, "documents.parquet")
-    if (!java.nio.file.Files.exists(root)) return "absent"
-    val stream = java.nio.file.Files.walk(root)
-    val parts =
-      try stream.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(p => s"${root.relativize(p)}:${java.nio.file.Files.size(p)}:" +
-          s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}")
-        .toSeq.sorted
-      finally stream.close()
-    java.util.UUID.nameUUIDFromBytes(
-      parts.mkString("\n").getBytes("UTF-8")).toString
-  }
-
-  /** The standard pair table (id_a < id_b, exact jaccard), materialized
-    * once per (session, sfDir, snapshot). */
-  def nearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "|" + dir + "|" +
-      snapshotFingerprint(dir)
-    spark.read.parquet(store.computeIfAbsent(key, _ => write(spark, dir)))
-  }
+  /** The standard pair table (id_a < id_b, exact jaccard). */
+  def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Artifacts.stored(spark, "pairs",
+        Seq(Tables.path(dir, "documents"))) { out =>
+      val pairs = Dedup.minhashLshPairs(Tables.documents(spark, dir),
+        "doc_id", "text", n = 2, k = 64, bands = 16, threshold = 0.5)
+      try pairs.write.mode("overwrite").parquet(out)
+      finally pairs.unpersist(blocking = false)
+      out
+    })
 }

@@ -709,7 +709,6 @@ object ZonedCorpus {
   def appendZones(df: DataFrame, path: String, zone: Column,
                   statCols: Seq[String], bloomCols: Seq[String] = Nil)
       : Long = {
-    import scala.jdk.CollectionConverters._
     val m = ZonedManifest.read(path)
     require(df.schema.fields.map(f => (f.name, f.dataType)).sameElements(
         m.schema.fields.map(f => (f.name, f.dataType))),
@@ -725,10 +724,7 @@ object ZonedCorpus {
       Files.move(tmp.resolve(z.dirName), Paths.get(path, dirName))
       z.copy(dirName = dirName)
     }
-    val stream = Files.walk(tmp)
-    try stream.iterator().asScala.toSeq.reverse
-      .foreach(Files.deleteIfExists)
-    finally stream.close()
+    graft.Artifacts.deleteRecursively(tmp)
     installManifest(path, m.schema, m.zones ++ renamed, v, m.deletes)
   }
 

@@ -336,15 +336,6 @@ object IngestPipeline {
     }
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      finally s.close()
-    }
-  }
-
   /** Install phase (idempotent): if a COMMITTED staged slice exists
     * (`_LABEL` marker, written after parquet's own `_SUCCESS`), move its
     * parquet files into the labeled partition dir; drop the staging
@@ -364,7 +355,7 @@ object IngestPipeline {
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         } finally s.close()
     }
-    deleteRecursively(staging)
+    graft.Artifacts.deleteRecursively(staging)
   }
 
   private def rollupDir(spark: SparkSession, dir: String, sealedBefore: Long,
@@ -404,7 +395,7 @@ object IngestPipeline {
     midSwap() // a reader here sees duplicates, never absences
     // … and delete the sealed dirs LAST (the fresh label dir is not in
     // `sealedDirs` — it was listed before the install created it)
-    sealedDirs.foreach(deleteRecursively)
+    sealedDirs.foreach(graft.Artifacts.deleteRecursively)
   }
 
   /** Wire a streaming doc frame into the flow. The protected index is

@@ -23,18 +23,36 @@ class BenchArtifactSpec extends AnyFunSuite {
 
   test("resultsJson is parseable at every prefix, with partial=true until complete") {
     val all = Seq("q01" -> 1.234, "q02" -> 0.5, "q03" -> 12.75)
-    for (n <- 0 to all.size) {
+    // a query whose pass threw: listed by name, never timed
+    val broken = Seq("q99_broken")
+    for (n <- 0 to all.size; failed <- Seq(Nil, broken)) {
       val prefix = all.take(n)
-      val json = parse(Bench.resultsJson(prefix, "/sf", partial = n < all.size))
+      val json = parse(Bench.resultsJson(prefix, "/sf", partial = n < all.size, failed))
       assert((json \ "metric") === JString("total"))
       assert((json \ "unit") === JString("sec"))
       assert((json \ "sf") === JString("/sf"))
       assert((json \ "partial") === JBool(n < all.size))
       val qs = (json \ "queries").asInstanceOf[JObject].obj
       assert(qs.map(_._1) === prefix.map(_._1))
+      assert((json \ "failed") === JArray(failed.map(JString(_)).toList))
       val total = (json \ "value").asInstanceOf[JDouble].num
       assert(math.abs(total - prefix.map(_._2).sum) < 1e-3)
     }
+  }
+
+  test("a pass that throws yields no timing, and the passes after it do not run") {
+    var runs = 0
+    var resets = 0
+    val ok = Bench.timePasses("q01", 2, () => resets += 1) { runs += 1 }
+    assert(ok.map(_.size) === Some(2) && runs === 2 && resets === 2)
+    runs = 0
+    resets = 0
+    val failed = Bench.timePasses("q02", 3, () => resets += 1) {
+      runs += 1
+      if (runs == 2) throw new IllegalStateException("boom")
+    }
+    assert(failed === None)
+    assert(runs === 2 && resets === 2)
   }
 
   test("flush atomically replaces the artifact and leaves no temp files") {
