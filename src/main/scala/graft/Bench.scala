@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main (driver contract): runs every registered query on
  * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop sink
@@ -104,40 +102,19 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt)
     val doWarmup = envFlag("SPARK_GRAFT_BENCH_WARMUP", default = true)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // shuffle parallelism defaults to the core count but can be scaled
-    // independently — at N× the data the partition count is the knob that
-    // keeps per-partition volume constant (see SCALING_r5.json)
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // local-iteration filter, mirroring Verify: SPARK_GRAFT_ONLY=q21,...
-    // restricts the timed set (driver never sets it → full run)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = (only match {
-      case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
-      case None    => SparkEntry.queries
-    }).toSeq.sortBy(_._1)
+    val ordered = SparkEntry.selected()
     // an empty-but-parseable artifact exists from the first moment
     try flush(out, resultsJson(Nil, sfDir, partial = true))
     catch { case e: Throwable => System.err.println(s"[bench] flush $out failed: $e") }
 
     if (doWarmup) {
-      ordered.foreach { case (name, fn) =>
+      ordered.foreach { case QuerySpec(name, fn, _) =>
         try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] WARMUP FAILED $name: $e")
@@ -171,7 +148,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_STEADY", "0").toInt)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    ordered.foreach { case (name, fn) =>
+    ordered.foreach { case QuerySpec(name, fn, _) =>
       if (steady > 0) {
         var prev = Double.NaN
         var i = 0

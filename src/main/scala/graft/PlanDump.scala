@@ -2,11 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Plan-audit main (optimization rounds): writes `explain("formatted")`
- * for every registered query (or the SPARK_GRAFT_ONLY subset) to one
+ * for every registered query (or the `SparkEntry.selected` subset) to one
  * file per query under the output directory — the artifact the
  * guide's "measure first" step wants next to the bench numbers, and
  * the evidence base for plan-shape claims (Exchange count, join
@@ -23,24 +21,10 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "/tmp/plans"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = (only match {
-      case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
-      case None    => SparkEntry.queries
-    }).toSeq.sortBy(_._1)
-    ordered.foreach { case (name, fn) =>
+    SparkEntry.selected().foreach { case QuerySpec(name, fn, _) =>
       try {
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(

@@ -1,54 +1,56 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import org.apache.spark.sql.SparkSession
+
+/** Correctness dump: each registered query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
+  *
+  *   runMain graft.Verify <sfDir> <outDir>
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // local-iteration filter: SPARK_GRAFT_ONLY=q43_dedup_clusters,q44_...
-    // restricts the dump to those queries (driver never sets it → full run)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(s) => SparkEntry.queries.filter { case (n, _) => s(n) }
-      case None    => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    try dump(spark, SparkEntry.selected(), sfDir, outDir)
+    finally spark.stop()
+  }
+
+  /** Writes each spec's result to `<outDir>/<name>` and their oracle SQL to
+    * `<outDir>/oracle_sql.json`. `<outDir>/<name>` is deleted before the
+    * query builds, so a query that throws leaves no output — never an
+    * earlier run's — and the oracle compare counts it as missing. */
+  def dump(spark: SparkSession, specs: Seq[QuerySpec], sfDir: String,
+           outDir: String): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    specs.foreach { s =>
+      Artifacts.deleteRecursively(Paths.get(outDir, s.name))
+      try s.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${s.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${s.name} failed: ${e.getMessage}")
       }
       // release anything a query pinned (CacheScope results) — queries are
       // independent dumps, nothing should accumulate across all of them
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = specs.map(s => s"${quote(s.name)}: ${quote(s.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in the oracle SQL would otherwise make the compare's
+    * json.load fail and silently zero the correctness gate. */
+  private def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -183,14 +183,7 @@ object WorkMass {
     val (sfDir, out) = (args(0), args(1))
     val wanted =
       if (args.length > 2) args.drop(2).toSet else counters.keySet
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val rows = counters.toSeq.sortBy(_._1)
       .filter { case (q, _) => wanted(q) }

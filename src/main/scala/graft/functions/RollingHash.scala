@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,12 +56,11 @@ case class RollingHash(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Registration helpers: temp-functions for a live session, plus a
-  * SparkSessionExtensions installer for `spark.sql.extensions`. */
+/** Registration helper: temp-functions for a live session. */
 object GraftFunctions {
-  /** Idempotent: a session built with
-    * `spark.sql.extensions=graft.functions.GraftExtensions` (or one this
-    * method already visited) is left untouched, so repeated calls from
+  /** Idempotent: a session built with [[GraftExtensions]]
+    * (GraftExtensions.scala; every `graft.GraftSession` is) or one this
+    * method already visited is left untouched, so repeated calls from
     * operator code neither re-register nor warn. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -85,71 +84,5 @@ object GraftFunctions {
     ensure("ngram_hashes", exprs => NgramHashes(exprs.head,
       exprs(1).eval().asInstanceOf[Int]))
     ensure("jaro_winkler", exprs => JaroWinkler(exprs.head, exprs(1)))
-  }
-}
-
-/** `--conf spark.sql.extensions=graft.functions.GraftExtensions` installs the
-  * functions permanently, plus the semantics-preserving optimizer rules of
-  * `graft.plans` (RegexExistenceRewrite, DisjunctiveJoinRewrite) and the
-  * as-of planner strategy — both Catalyst extension tiers ride the one
-  * entry point. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head,
-        exprs(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, "sorted_intersect_size"),
-      (exprs: Seq[Expression]) => SortedIntersectSize(exprs.head, exprs(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("morton_key"),
-      new ExpressionInfo(classOf[MortonKey].getName, "morton_key"),
-      (exprs: Seq[Expression]) => MortonKey(exprs.head, exprs(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_contains"),
-      (exprs: Seq[Expression]) => BloomMightContain(exprs.head,
-        exprs(1).eval().asInstanceOf[Array[Byte]])))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("hamming_bucket_pairs"),
-      new ExpressionInfo(classOf[HammingBucketPairs].getName,
-        "hamming_bucket_pairs"),
-      (exprs: Seq[Expression]) => HammingBucketPairs(exprs.head,
-        exprs(1), exprs(2).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes"),
-      (exprs: Seq[Expression]) => NgramHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (exprs: Seq[Expression]) => JaroWinkler(exprs.head, exprs(1))))
-    // tier-c Catalyst extensions: optimizer rewrites + the native as-of
-    // physical operator (see graft.plans). PkFkJoinElimination is NOT
-    // injected — it is result-changing without declared constraints and
-    // stays opt-in via ConstraintCatalog.
-    ext.injectOptimizerRule(_ => graft.plans.RegexExistenceRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.DisjunctiveJoinRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
 }

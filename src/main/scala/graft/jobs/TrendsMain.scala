@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
+import graft.GraftSession
 import graft.model.Schemas
 import graft.queries.HighlightQueries.{Params, TrendsTables}
 import graft.sources.{DeclaredParquet, JdbcSource}
@@ -93,13 +94,7 @@ object TrendsMain {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("trends")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("trends").getOrCreate()
     try run(spark, parseArgs(args))
     finally spark.stop()
   }

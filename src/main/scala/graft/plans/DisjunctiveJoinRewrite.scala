@@ -16,9 +16,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
  * joining on `k1 = k1' OR k2 = k2'` gets the scale-safe plan without
  * knowing the trick (reference shape: trends.go:357-367 joins
  * status.ust_status_id twice under an OR). Installed SESSION-DEFAULT by
- * [[graft.functions.GraftExtensions]] (`injectOptimizerRule`), so every
- * session built with `spark.sql.extensions=graft.functions.GraftExtensions`
- * carries it; [[install]] remains for bare sessions.
+ * [[graft.functions.GraftExtensions]] (functions/GraftExtensions.scala,
+ * `injectOptimizerRule`), so every `graft.GraftSession` carries it;
+ * [[install]] remains for bare sessions.
  *
  * Spark plans an inner join whose condition is a pure disjunction as a
  * BroadcastNestedLoopJoin — O(|L|·|R|) comparisons, the plan that dies
@@ -357,8 +357,8 @@ object DisjunctiveJoinRewrite extends Rule[LogicalPlan] {
   /** Idempotently install into a BARE session's experimental
     * optimizations (the user-provided batch — pruning and pushdown have
     * already run there). Sessions built with
-    * `spark.sql.extensions=graft.functions.GraftExtensions` carry the
-    * rule already (operator-optimization batch) and never need this. */
+    * [[graft.functions.GraftExtensions]] carry the rule already
+    * (operator-optimization batch) and never need this. */
   def install(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.experimental.synchronized {
       if (!spark.experimental.extraOptimizations.contains(this))

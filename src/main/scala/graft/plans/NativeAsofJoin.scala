@@ -48,7 +48,7 @@ case class AsofJoinPlan(left: LogicalPlan, right: LogicalPlan,
 
 /** Plans [[AsofJoinPlan]] to [[AsofJoinExec]]; injected via
   * `SparkSessionExtensions.injectPlannerStrategy` (see
-  * [[graft.functions.GraftExtensions]]). */
+  * [[graft.functions.GraftExtensions]], functions/GraftExtensions.scala). */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoinPlan(l, r, lk, rk, lt, rt, fwd, tol, near) =>

@@ -95,13 +95,15 @@ class ArtifactsSpec extends SparkSpec {
   }
 
   test("deleteRecursively removes a nested tree and ignores a missing path") {
-    val top = Files.createTempDirectory("artifacts-delete")
-    Files.createDirectories(top.resolve("a/b"))
-    Files.writeString(top.resolve("a/b/f"), "x")
-    Files.writeString(top.resolve("g"), "y")
-    Artifacts.deleteRecursively(top)
-    assert(!Files.exists(top))
-    Artifacts.deleteRecursively(top)
+    withTempDirs("artifacts-delete") { case Seq(dir) =>
+      val top = Paths.get(dir)
+      Files.createDirectories(top.resolve("a/b"))
+      Files.writeString(top.resolve("a/b/f"), "x")
+      Files.writeString(top.resolve("g"), "y")
+      Artifacts.deleteRecursively(top)
+      assert(!Files.exists(top))
+      Artifacts.deleteRecursively(top)
+    }
   }
 
   test("scratch dirs live under the session root") {

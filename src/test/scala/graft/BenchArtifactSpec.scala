@@ -56,19 +56,21 @@ class BenchArtifactSpec extends AnyFunSuite {
   }
 
   test("flush atomically replaces the artifact and leaves no temp files") {
-    val dir = Files.createTempDirectory("bench-artifact")
-    val out = dir.resolve("bench_out.json").toString
-    Bench.flush(out, Bench.resultsJson(Seq("q01" -> 1.0), "/sf", partial = true))
-    Bench.flush(out, Bench.resultsJson(Seq("q01" -> 1.0, "q02" -> 2.0), "/sf", partial = false))
-    val onDisk = Files.readString(Paths.get(out)).trim
-    val json = parse(onDisk)
-    assert((json \ "partial") === JBool(false))
-    assert((json \ "queries").asInstanceOf[JObject].obj.map(_._1) === Seq("q01", "q02"))
-    // no .tmp-* residue — a crashed flush can strand at most one, and a
-    // successful one must strand none
-    val leftovers = Files.list(dir).iterator()
-    val names = scala.jdk.CollectionConverters.IteratorHasAsScala(leftovers)
-      .asScala.map(_.getFileName.toString).toSeq
-    assert(names === Seq("bench_out.json"))
+    SparkSpec.withTempDirs("bench-artifact") { case Seq(root) =>
+      val dir = Paths.get(root)
+      val out = dir.resolve("bench_out.json").toString
+      Bench.flush(out, Bench.resultsJson(Seq("q01" -> 1.0), "/sf", partial = true))
+      Bench.flush(out, Bench.resultsJson(Seq("q01" -> 1.0, "q02" -> 2.0), "/sf", partial = false))
+      val onDisk = Files.readString(Paths.get(out)).trim
+      val json = parse(onDisk)
+      assert((json \ "partial") === JBool(false))
+      assert((json \ "queries").asInstanceOf[JObject].obj.map(_._1) === Seq("q01", "q02"))
+      // no .tmp-* residue — a crashed flush can strand at most one, and a
+      // successful one must strand none
+      val leftovers = Files.list(dir).iterator()
+      val names = scala.jdk.CollectionConverters.IteratorHasAsScala(leftovers)
+        .asScala.map(_.getFileName.toString).toSeq
+      assert(names === Seq("bench_out.json"))
+    }
   }
 }

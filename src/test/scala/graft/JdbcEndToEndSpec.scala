@@ -134,81 +134,83 @@ class JdbcEndToEndSpec extends SparkSpec {
   }
 
   test("streaming daily counts upsert over JDBC: per-group scope, no dups") {
-    db
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val cp = java.nio.file.Files.createTempDirectory("jdbc-cp").toString
-    def ev(id: Long, t: String, typ: String, v: Double) =
-      Event(id, java.sql.Timestamp.valueOf(t), 1L, typ, v, "{}")
-    val input = MemoryStream[Event]
-    val q = EventStreams.writeDailyUpsertJdbc(
-      EventStreams.dailyCounts(input.toDF(), lateness = "1 hour"),
-      url, "daily_counts", cp)
-    try {
-      input.addData(
-        ev(1, "2024-01-01 12:00:00", "view", 1.0),
-        ev(2, "2024-01-01 12:30:00", "click", 9.0))
-      q.processAllAvailable()
-      // second batch updates only the view group; click must survive
-      input.addData(ev(3, "2024-01-01 13:00:00", "view", 2.0))
-      q.processAllAvailable()
-      val back = JdbcSource.table(spark, cfg, "daily_counts").collect()
-        .map(r => r.getAs[String]("EVENT_TYPE") -> r.getAs[Long]("N_EVENTS"))
-        .toMap
-      assert(back === Map("view" -> 2L, "click" -> 1L))
-    } finally q.stop()
+    withTempDirs("jdbc-cp") { case Seq(cp) =>
+      db
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      def ev(id: Long, t: String, typ: String, v: Double) =
+        Event(id, java.sql.Timestamp.valueOf(t), 1L, typ, v, "{}")
+      val input = MemoryStream[Event]
+      val q = EventStreams.writeDailyUpsertJdbc(
+        EventStreams.dailyCounts(input.toDF(), lateness = "1 hour"),
+        url, "daily_counts", cp)
+      try {
+        input.addData(
+          ev(1, "2024-01-01 12:00:00", "view", 1.0),
+          ev(2, "2024-01-01 12:30:00", "click", 9.0))
+        q.processAllAvailable()
+        // second batch updates only the view group; click must survive
+        input.addData(ev(3, "2024-01-01 13:00:00", "view", 2.0))
+        q.processAllAvailable()
+        val back = JdbcSource.table(spark, cfg, "daily_counts").collect()
+          .map(r => r.getAs[String]("EVENT_TYPE") -> r.getAs[Long]("N_EVENTS"))
+          .toMap
+        assert(back === Map("view" -> 2L, "click" -> 1L))
+      } finally q.stop()
+    }
   }
 
   test("sessionizeTws → keyed JDBC upsert: timer-closed sessions land, replay is a no-op") {
-    db
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val cp = java.nio.file.Files.createTempDirectory("sess-cp").toString
-      def ev(id: Long, t: String, u: Long) =
-        Event(id, java.sql.Timestamp.valueOf(t), u, "view", 1.0, "{}")
-      val input = MemoryStream[Event]
-      val keyCols = Seq("user_id", "session_start")
-      val q = EventStreams.writeKeyedUpsertJdbc(
-        EventStreams.sessionizeTws(input.toDS(),
-          gapMs = 10 * 60 * 1000L, lateness = "0 seconds").toDF(),
-        keyCols, url, "user_sessions", cp,
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+    withTempDirs("sess-cp") { case Seq(cp) =>
+      db
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val providerKey = "spark.sql.streaming.stateStore.providerClass"
+      val prev = spark.conf.getOption(providerKey)
+      spark.conf.set(providerKey,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       try {
-        input.addData(
-          ev(1, "2024-01-01 10:00:00", 1),
-          ev(2, "2024-01-01 10:05:00", 1))
-        q.processAllAvailable()
-        def rows() = JdbcSource.table(spark, cfg, "user_sessions").collect()
-          .map(r => (r.getAs[Long]("USER_ID"),
-            r.getAs[java.sql.Timestamp]("SESSION_START").toString,
-            r.getAs[java.sql.Timestamp]("SESSION_END").toString,
-            r.getAs[Long]("N_EVENTS")))
-        assert(rows().isEmpty, "session upserted before its timer fired")
-        // user 2's 11:00 event pushes the watermark past 10:15 — user 1's
-        // timer fires, the closed session rides foreachBatch into Derby
-        input.addData(ev(3, "2024-01-01 11:00:00", 2))
-        q.processAllAvailable()
-        val first = rows()
-        assert(first.toSeq === Seq(
-          (1L, "2024-01-01 10:00:00.0", "2024-01-01 10:05:00.0", 2L)))
-        // replay: Structured Streaming re-invokes the foreachBatch body
-        // with the same batch content after a failure — calling it again
-        // with the emitted session must leave the table unchanged
-        val emitted = spark.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row(1L,
-            java.sql.Timestamp.valueOf("2024-01-01 10:00:00"),
-            java.sql.Timestamp.valueOf("2024-01-01 10:05:00"), 2L)),
-          org.apache.spark.sql.Encoders
-            .product[EventStreams.UserSession].schema)
-        EventStreams.upsertBatchKeyed(emitted, keyCols, url, "user_sessions")
-        assert(rows().toSeq === first.toSeq, "replayed batch duplicated rows")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
+        def ev(id: Long, t: String, u: Long) =
+          Event(id, java.sql.Timestamp.valueOf(t), u, "view", 1.0, "{}")
+        val input = MemoryStream[Event]
+        val keyCols = Seq("user_id", "session_start")
+        val q = EventStreams.writeKeyedUpsertJdbc(
+          EventStreams.sessionizeTws(input.toDS(),
+            gapMs = 10 * 60 * 1000L, lateness = "0 seconds").toDF(),
+          keyCols, url, "user_sessions", cp,
+          mode = org.apache.spark.sql.streaming.OutputMode.Append())
+        try {
+          input.addData(
+            ev(1, "2024-01-01 10:00:00", 1),
+            ev(2, "2024-01-01 10:05:00", 1))
+          q.processAllAvailable()
+          def rows() = JdbcSource.table(spark, cfg, "user_sessions").collect()
+            .map(r => (r.getAs[Long]("USER_ID"),
+              r.getAs[java.sql.Timestamp]("SESSION_START").toString,
+              r.getAs[java.sql.Timestamp]("SESSION_END").toString,
+              r.getAs[Long]("N_EVENTS")))
+          assert(rows().isEmpty, "session upserted before its timer fired")
+          // user 2's 11:00 event pushes the watermark past 10:15 — user 1's
+          // timer fires, the closed session rides foreachBatch into Derby
+          input.addData(ev(3, "2024-01-01 11:00:00", 2))
+          q.processAllAvailable()
+          val first = rows()
+          assert(first.toSeq === Seq(
+            (1L, "2024-01-01 10:00:00.0", "2024-01-01 10:05:00.0", 2L)))
+          // replay: Structured Streaming re-invokes the foreachBatch body
+          // with the same batch content after a failure — calling it again
+          // with the emitted session must leave the table unchanged
+          val emitted = spark.createDataFrame(
+            java.util.List.of(org.apache.spark.sql.Row(1L,
+              java.sql.Timestamp.valueOf("2024-01-01 10:00:00"),
+              java.sql.Timestamp.valueOf("2024-01-01 10:05:00"), 2L)),
+            org.apache.spark.sql.Encoders
+              .product[EventStreams.UserSession].schema)
+          EventStreams.upsertBatchKeyed(emitted, keyCols, url, "user_sessions")
+          assert(rows().toSeq === first.toSeq, "replayed batch duplicated rows")
+        } finally q.stop()
+      } finally prev match {
+        case Some(v) => spark.conf.set(providerKey, v)
+        case None => spark.conf.unset(providerKey)
+      }
     }
   }
 }

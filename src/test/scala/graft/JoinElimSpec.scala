@@ -128,73 +128,71 @@ class JoinElimSpec extends SparkSpec {
 
   test("DSv2 zoned dim: eliminated when the planned scan pushed no " +
       "filters; filtered zoned scans keep their join") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-joinelim-zoned").toString
-    // the zoned layout stores long/string — key cast happens at WRITE
-    // time so the stored pk attribute joins bare (a Cast in the join
-    // condition would rightly veto the rewrite)
-    graft.sources.ZonedCorpus.write(
-      Tables.region(spark, dir).select(
-        $"r_regionkey".cast("long").as("r_regionkey"), $"r_name"),
-      tmp, expr("r_regionkey DIV 2"), Seq("r_regionkey"))
-    ConstraintCatalog.declareRi("n_regionkey", "r_regionkey",
-      pkTableTag = tmp)
-    PkFkJoinElimination.install(spark)
-    val natL = nat.withColumn("n_regionkey", $"n_regionkey".cast("long"))
-    def zonedDim = spark.read.format("graft.sources.ZonedSource").load(tmp)
-    def q(r: DataFrame) =
-      natL.join(r, natL("n_regionkey") === r("r_regionkey"))
+    withTempDirs("graft-joinelim-zoned") { case Seq(tmp) =>
+      // the zoned layout stores long/string — key cast happens at WRITE
+      // time so the stored pk attribute joins bare (a Cast in the join
+      // condition would rightly veto the rewrite)
+      graft.sources.ZonedCorpus.write(
+        Tables.region(spark, dir).select(
+          $"r_regionkey".cast("long").as("r_regionkey"), $"r_name"),
+        tmp, expr("r_regionkey DIV 2"), Seq("r_regionkey"))
+      ConstraintCatalog.declareRi("n_regionkey", "r_regionkey",
+        pkTableTag = tmp)
+      PkFkJoinElimination.install(spark)
+      val natL = nat.withColumn("n_regionkey", $"n_regionkey".cast("long"))
+      def zonedDim = spark.read.format("graft.sources.ZonedSource").load(tmp)
+      def q(r: DataFrame) =
+        natL.join(r, natL("n_regionkey") === r("r_regionkey"))
+          .groupBy($"n_regionkey").agg(count(lit(1)).as("n"))
+          .orderBy($"n_regionkey")
+      val withRule = q(zonedDim)
+      assert(joins(withRule) === 0, "zoned-dim join not eliminated:\n" +
+        withRule.queryExecution.optimizedPlan.treeString)
+      val (ctrlJoins, ctrlRows) = withoutRule {
+        val df = q(zonedDim)
+        (joins(df), df.collect().toSeq)
+      }
+      assert(ctrlJoins === 1)
+      assert(withRule.collect().toSeq === ctrlRows)
+      // veto: any real dim filter survives — whether it reaches the scan
+      // as pushed zone pruning (r_regionkey >= 1, a stat column) or stays
+      // a residual (r_name <> '') the Filter node above the v2 scan is
+      // not IsNotNull(pk)-only, and the scan's pushed list is non-empty
+      val pruned = zonedDim.filter($"r_regionkey" >= 1)
+      val fp = natL.join(pruned, natL("n_regionkey") === pruned("r_regionkey"))
         .groupBy($"n_regionkey").agg(count(lit(1)).as("n"))
-        .orderBy($"n_regionkey")
-    val withRule = q(zonedDim)
-    assert(joins(withRule) === 0, "zoned-dim join not eliminated:\n" +
-      withRule.queryExecution.optimizedPlan.treeString)
-    val (ctrlJoins, ctrlRows) = withoutRule {
-      val df = q(zonedDim)
-      (joins(df), df.collect().toSeq)
+      assert(joins(fp) === 1, "pruning-filtered zoned dim must keep join")
+      val resid = zonedDim.filter($"r_name" =!= "")
+      val fr = natL.join(resid, natL("n_regionkey") === resid("r_regionkey"))
+        .groupBy($"n_regionkey").agg(count(lit(1)).as("n"))
+      assert(joins(fr) === 1, "residual-filtered zoned dim must keep join")
     }
-    assert(ctrlJoins === 1)
-    assert(withRule.collect().toSeq === ctrlRows)
-    // veto: any real dim filter survives — whether it reaches the scan
-    // as pushed zone pruning (r_regionkey >= 1, a stat column) or stays
-    // a residual (r_name <> '') the Filter node above the v2 scan is
-    // not IsNotNull(pk)-only, and the scan's pushed list is non-empty
-    val pruned = zonedDim.filter($"r_regionkey" >= 1)
-    val fp = natL.join(pruned, natL("n_regionkey") === pruned("r_regionkey"))
-      .groupBy($"n_regionkey").agg(count(lit(1)).as("n"))
-    assert(joins(fp) === 1, "pruning-filtered zoned dim must keep join")
-    val resid = zonedDim.filter($"r_name" =!= "")
-    val fr = natL.join(resid, natL("n_regionkey") === resid("r_regionkey"))
-      .groupBy($"n_regionkey").agg(count(lit(1)).as("n"))
-    assert(joins(fr) === 1, "residual-filtered zoned dim must keep join")
   }
 
   test("table binding: a same-named pk on the WRONG table no longer " +
       "eliminates; the bound table does; LocalRelation is ineligible " +
       "under a binding") {
-    val dimDir = java.nio.file.Files
-      .createTempDirectory("graft-joinelim-bind").toString
-    spark.range(0, 10).selectExpr("id AS d_key", "id * 2 AS d_val")
-      .write.mode("overwrite").parquet(dimDir)
-    val wrongDir = java.nio.file.Files
-      .createTempDirectory("graft-joinelim-wrong").toString
-    // a DIFFERENT table that happens to expose the same column name —
-    // the round-9 soundness hole: name-keyed constraints would have
-    // eliminated a join against it
-    spark.range(0, 10).selectExpr("id % 3 AS d_key", "id AS other")
-      .write.mode("overwrite").parquet(wrongDir)
-    ConstraintCatalog.declareRi("f_key", "d_key", pkTableTag = dimDir)
-    PkFkJoinElimination.install(spark)
-    val fact = spark.range(0, 50).selectExpr("id % 10 AS f_key",
-      "id AS payload")
-    def q(d: DataFrame) = fact.join(d, $"f_key" === d("d_key"))
-      .groupBy($"f_key").agg(count(lit(1)).as("n"))
-    assert(joins(q(spark.read.parquet(dimDir))) === 0,
-      "bound table must eliminate")
-    assert(joins(q(spark.read.parquet(wrongDir))) === 1,
-      "same-named pk on another table must keep its join")
-    val local = Seq((0L, 1L), (1L, 2L)).toDF("d_key", "x")
-    assert(joins(q(local)) === 1,
-      "LocalRelation has no identity — ineligible under a binding")
+    withTempDirs("graft-joinelim-bind", "graft-joinelim-wrong") { case Seq(dimDir, wrongDir) =>
+      spark.range(0, 10).selectExpr("id AS d_key", "id * 2 AS d_val")
+        .write.mode("overwrite").parquet(dimDir)
+      // a DIFFERENT table that happens to expose the same column name —
+      // the round-9 soundness hole: name-keyed constraints would have
+      // eliminated a join against it
+      spark.range(0, 10).selectExpr("id % 3 AS d_key", "id AS other")
+        .write.mode("overwrite").parquet(wrongDir)
+      ConstraintCatalog.declareRi("f_key", "d_key", pkTableTag = dimDir)
+      PkFkJoinElimination.install(spark)
+      val fact = spark.range(0, 50).selectExpr("id % 10 AS f_key",
+        "id AS payload")
+      def q(d: DataFrame) = fact.join(d, $"f_key" === d("d_key"))
+        .groupBy($"f_key").agg(count(lit(1)).as("n"))
+      assert(joins(q(spark.read.parquet(dimDir))) === 0,
+        "bound table must eliminate")
+      assert(joins(q(spark.read.parquet(wrongDir))) === 1,
+        "same-named pk on another table must keep its join")
+      val local = Seq((0L, 1L), (1L, 2L)).toDF("d_key", "x")
+      assert(joins(q(local)) === 1,
+        "LocalRelation has no identity — ineligible under a binding")
+    }
   }
 }

@@ -22,47 +22,48 @@ class PqStoreSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
   }
 
-  private def tmpRoot() = java.nio.file.Files
-    .createTempDirectory("graft-pqstore").toString + "/idx"
-
   private val query: Seq[Float] = Seq.fill(16)(0.4f)
 
   private def collectTopK(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   test("stored probe ≡ the in-query residual IVF-PQ twin") {
-    val df = vecs(80)
-    val root = tmpRoot()
-    PqStore.build(df, "vec_id", "embedding", root, P)
-    val stored = collectTopK(PqStore.probeTopK(spark, root, query,
-      nProbe = 2, k = 10))
-    val twin = collectTopK(Pq.ivfPqResidualTopK(df, "vec_id", "embedding",
-      query, P.dim, P.m, P.codebookK, P.nCells, nProbe = 2, k = 10))
-    assert(stored === twin)
-    assert(stored.nonEmpty)
+    withTempDirs("graft-pqstore") { case Seq(dir) =>
+      val df = vecs(80)
+      val root = s"$dir/idx"
+      PqStore.build(df, "vec_id", "embedding", root, P)
+      val stored = collectTopK(PqStore.probeTopK(spark, root, query,
+        nProbe = 2, k = 10))
+      val twin = collectTopK(Pq.ivfPqResidualTopK(df, "vec_id", "embedding",
+        query, P.dim, P.m, P.codebookK, P.nCells, nProbe = 2, k = 10))
+      assert(stored === twin)
+      assert(stored.nonEmpty)
+    }
   }
 
   test("frozen-codebook ingest: build(prefix) + ingest(rest) ≡ " +
     "build(all) when the prefix holds the seed rows") {
-    val all = vecs(100)
-    val prefix = all.filter(col("vec_id") < 60L) // holds seeds 0..5, cells 0..3
-    val rest = all.filter(col("vec_id") >= 60L)
-    val incRoot = tmpRoot(); val fullRoot = tmpRoot()
-    PqStore.build(prefix, "vec_id", "embedding", incRoot, P)
-    PqStore.ingest(spark, rest, "vec_id", "embedding", incRoot)
-    PqStore.build(all, "vec_id", "embedding", fullRoot, P)
-    for (probe <- 1 to 4) {
-      val inc = collectTopK(PqStore.probeTopK(spark, incRoot, query,
-        nProbe = probe, k = 15))
-      val full = collectTopK(PqStore.probeTopK(spark, fullRoot, query,
-        nProbe = probe, k = 15))
-      assert(inc === full, s"nProbe=$probe")
+    withTempDirs("graft-pqstore", "graft-pqstore") { case Seq(incDir, fullDir) =>
+      val all = vecs(100)
+      val prefix = all.filter(col("vec_id") < 60L) // holds seeds 0..5, cells 0..3
+      val rest = all.filter(col("vec_id") >= 60L)
+      val incRoot = s"$incDir/idx"; val fullRoot = s"$fullDir/idx"
+      PqStore.build(prefix, "vec_id", "embedding", incRoot, P)
+      PqStore.ingest(spark, rest, "vec_id", "embedding", incRoot)
+      PqStore.build(all, "vec_id", "embedding", fullRoot, P)
+      for (probe <- 1 to 4) {
+        val inc = collectTopK(PqStore.probeTopK(spark, incRoot, query,
+          nProbe = probe, k = 15))
+        val full = collectTopK(PqStore.probeTopK(spark, fullRoot, query,
+          nProbe = probe, k = 15))
+        assert(inc === full, s"nProbe=$probe")
+      }
+      // and the incremental index answers for the ingested rows too: with
+      // every cell probed, all 100 ids are rankable
+      val every = PqStore.probeTopK(spark, incRoot, query, nProbe = 4,
+        k = 100).collect()
+      assert(every.length === 100)
     }
-    // and the incremental index answers for the ingested rows too: with
-    // every cell probed, all 100 ids are rankable
-    val every = PqStore.probeTopK(spark, incRoot, query, nProbe = 4,
-      k = 100).collect()
-    assert(every.length === 100)
   }
 
   /** Scans under AQE live inside materialized query stages — descend. */
@@ -77,36 +78,40 @@ class PqStoreSpec extends SparkSpec {
       }.flatten
 
   test("probe scan is partition-pruned to the routed cells") {
-    val df = vecs(80)
-    val root = tmpRoot()
-    PqStore.build(df, "vec_id", "embedding", root, P)
-    val probe = PqStore.probeTopK(spark, root, query, nProbe = 2, k = 10)
-    probe.collect()
-    val scan = allScans(probe.queryExecution.executedPlan)
-      .find(_.relation.partitionSchema.fieldNames.contains("cell_id"))
-      .get
-    assert(scan.partitionFilters.mkString.contains("cell_id"))
-    val selected = scan.metrics("numFiles").value
-    val total = spark.read.parquet(s"$root/codes").inputFiles.length
-    assert(selected < total,
-      s"scan read $selected of $total files — no pruning happened")
+    withTempDirs("graft-pqstore") { case Seq(dir) =>
+      val df = vecs(80)
+      val root = s"$dir/idx"
+      PqStore.build(df, "vec_id", "embedding", root, P)
+      val probe = PqStore.probeTopK(spark, root, query, nProbe = 2, k = 10)
+      probe.collect()
+      val scan = allScans(probe.queryExecution.executedPlan)
+        .find(_.relation.partitionSchema.fieldNames.contains("cell_id"))
+        .get
+      assert(scan.partitionFilters.mkString.contains("cell_id"))
+      val selected = scan.metrics("numFiles").value
+      val total = spark.read.parquet(s"$root/codes").inputFiles.length
+      assert(selected < total,
+        s"scan read $selected of $total files — no pruning happened")
+    }
   }
 
   test(" ingest appends file-granular slices: the stored base is untouched") {
-    val all = vecs(40)
-    val root = tmpRoot()
-    PqStore.build(all.filter(col("vec_id") < 30L), "vec_id", "embedding",
-      root, P)
-    val before = spark.read.parquet(s"$root/codes").inputFiles.toSet
-    PqStore.ingest(spark, all.filter(col("vec_id") >= 30L), "vec_id",
-      "embedding", root)
-    val after = spark.read.parquet(s"$root/codes").inputFiles.toSet
-    assert(before.subsetOf(after), "ingest rewrote existing code files")
-    assert(after.size > before.size)
-    // every vector is coded exactly once per subspace
-    val n = spark.read.parquet(s"$root/codes")
-      .groupBy(col("vec_id")).agg(count(lit(1)).as("c"))
-      .filter(col("c") =!= P.m).count()
-    assert(n === 0L)
+    withTempDirs("graft-pqstore") { case Seq(dir) =>
+      val all = vecs(40)
+      val root = s"$dir/idx"
+      PqStore.build(all.filter(col("vec_id") < 30L), "vec_id", "embedding",
+        root, P)
+      val before = spark.read.parquet(s"$root/codes").inputFiles.toSet
+      PqStore.ingest(spark, all.filter(col("vec_id") >= 30L), "vec_id",
+        "embedding", root)
+      val after = spark.read.parquet(s"$root/codes").inputFiles.toSet
+      assert(before.subsetOf(after), "ingest rewrote existing code files")
+      assert(after.size > before.size)
+      // every vector is coded exactly once per subspace
+      val n = spark.read.parquet(s"$root/codes")
+        .groupBy(col("vec_id")).agg(count(lit(1)).as("c"))
+        .filter(col("c") =!= P.m).count()
+      assert(n === 0L)
+    }
   }
 }

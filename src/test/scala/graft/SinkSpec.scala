@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.queries.HighlightQueries
 import graft.queries.HighlightQueries.Params
 import graft.sink.KeyedPartitionSink
@@ -24,33 +22,35 @@ class SinkSpec extends SparkSpec {
   }
 
   test("dynamic partition overwrite: re-running a day replaces only that partition") {
-    val dir = Files.createTempDirectory("sink").toString
-    val result = HighlightQueries.curatedHighlights(t, params)
-    val day1 = KeyedPartitionSink.assembleDocs(result, "LIST", "2023-03-10", "status")
-    val day2 = KeyedPartitionSink.assembleDocs(result, "LIST", "2023-03-11", "status")
-    KeyedPartitionSink.write(day1.union(day2), dir)
-    val before = spark.read.parquet(dir)
-    assert(before.select("ingest_date").distinct().count() === 2)
-    val day1Count = before.filter(before("ingest_date") === "2023-03-10").count()
+    withTempDirs("sink") { case Seq(dir) =>
+      val result = HighlightQueries.curatedHighlights(t, params)
+      val day1 = KeyedPartitionSink.assembleDocs(result, "LIST", "2023-03-10", "status")
+      val day2 = KeyedPartitionSink.assembleDocs(result, "LIST", "2023-03-11", "status")
+      KeyedPartitionSink.write(day1.union(day2), dir)
+      val before = spark.read.parquet(dir)
+      assert(before.select("ingest_date").distinct().count() === 2)
+      val day1Count = before.filter(before("ingest_date") === "2023-03-10").count()
 
-    // replay day 1 with fewer rows — day 2 must survive, day 1 replaced
-    KeyedPartitionSink.write(day1.limit(1), dir)
-    val after = spark.read.parquet(dir)
-    assert(after.filter(after("ingest_date") === "2023-03-11").count() ===
-      before.filter(before("ingest_date") === "2023-03-11").count())
-    assert(after.filter(after("ingest_date") === "2023-03-10").count() === 1)
-    assert(day1Count > 1)
+      // replay day 1 with fewer rows — day 2 must survive, day 1 replaced
+      KeyedPartitionSink.write(day1.limit(1), dir)
+      val after = spark.read.parquet(dir)
+      assert(after.filter(after("ingest_date") === "2023-03-11").count() ===
+        before.filter(before("ingest_date") === "2023-03-11").count())
+      assert(after.filter(after("ingest_date") === "2023-03-10").count() === 1)
+      assert(day1Count > 1)
+    }
   }
 
   test("three-pass job writes all status types; dry-run writes nothing") {
-    val dir = Files.createTempDirectory("job").toString
-    TrendsJob.run(t, TrendsJob.Config(params, dir))
-    val out = spark.read.parquet(dir)
-    assert(out.select("status_type").distinct().count() === 3)
+    withTempDirs("job", "dry") { case Seq(dir, dry) =>
+      TrendsJob.run(t, TrendsJob.Config(params, dir))
+      val out = spark.read.parquet(dir)
+      assert(out.select("status_type").distinct().count() === 3)
 
-    val dryDir = Files.createTempDirectory("dry").toString + "/none"
-    TrendsJob.run(t, TrendsJob.Config(params, dryDir, dryRun = true))
-    assert(!new java.io.File(dryDir).exists())
+      val dryDir = s"$dry/none"
+      TrendsJob.run(t, TrendsJob.Config(params, dryDir, dryRun = true))
+      assert(!new java.io.File(dryDir).exists())
+    }
   }
 
   test("distinct-sources-only mode runs exactly pass 3") {

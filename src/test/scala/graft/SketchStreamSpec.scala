@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -21,42 +19,42 @@ class SketchStreamSpec extends SparkSpec {
 
   test("stored sketch after N micro-batches == one-shot sketch of the " +
       "union; replay converges") {
-    implicit val sqlCtx = spark.sqlContext
-    val store = Files.createTempDirectory("graft-cms-store").toString
-    val checkpoint = Files.createTempDirectory("graft-cms-ckpt").toString
-    val mem = MemoryStream[Long]
-    val events = mem.toDF().toDF("user_id")
+    withTempDirs("graft-cms-store", "graft-cms-ckpt") { case Seq(store, checkpoint) =>
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[Long]
+      val events = mem.toDF().toDF("user_id")
 
-    val q = SketchStream.writeCmsCells(events, store, checkpoint,
-      col("user_id"), depth = 4, width = 64)
-    val batches = Seq(
-      (0L until 500L).toSeq,
-      (200L until 900L).map(_ * 7L),
-      Seq.fill(300)(42L).map(identity))
-    try {
-      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+      val q = SketchStream.writeCmsCells(events, store, checkpoint,
+        col("user_id"), depth = 4, width = 64)
+      val batches = Seq(
+        (0L until 500L).toSeq,
+        (200L until 900L).map(_ * 7L),
+        Seq.fill(300)(42L).map(identity))
+      try {
+        batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      } finally q.stop()
 
-    val stored = SketchStream.readCells(spark, store).get
-    val oneShot = CountMin.build(
-      batches.flatten.toDF("user_id"), col("user_id"), 4, 64)
-    assert(cells(stored) === cells(oneShot))
+      val stored = SketchStream.readCells(spark, store).get
+      val oneShot = CountMin.build(
+        batches.flatten.toDF("user_id"), col("user_id"), 4, 64)
+      assert(cells(stored) === cells(oneShot))
 
-    // replay: re-running the LAST batch id with the same content (what
-    // Structured Streaming does after a crash) recomputes its version
-    // from the same parent — the store is unchanged
-    val lastId = graft.streaming.PartialStore
-      .latestVersion(store, conf =
-        spark.sparkContext.hadoopConfiguration).get
-    SketchStream.mergeCmsBatch(batches.last.toDF("user_id"), lastId,
-      store, col("user_id"), 4, 64)
-    assert(cells(SketchStream.readCells(spark, store).get)
-      === cells(oneShot))
+      // replay: re-running the LAST batch id with the same content (what
+      // Structured Streaming does after a crash) recomputes its version
+      // from the same parent — the store is unchanged
+      val lastId = graft.streaming.PartialStore
+        .latestVersion(store, conf =
+          spark.sparkContext.hadoopConfiguration).get
+      SketchStream.mergeCmsBatch(batches.last.toDF("user_id"), lastId,
+        store, col("user_id"), 4, 64)
+      assert(cells(SketchStream.readCells(spark, store).get)
+        === cells(oneShot))
 
-    // and the stored cells feed the standard probe path unchanged
-    val est = CountMin.estimate(stored, Seq(42L).toDF("user_id"),
-      col("user_id"), 4, 64).collect().head
-    val trueN = batches.flatten.count(_ == 42L)
-    assert(est.getLong(1) >= trueN.toLong)
+      // and the stored cells feed the standard probe path unchanged
+      val est = CountMin.estimate(stored, Seq(42L).toDF("user_id"),
+        col("user_id"), 4, 64).collect().head
+      val trueN = batches.flatten.count(_ == 42L)
+      assert(est.getLong(1) >= trueN.toLong)
+    }
   }
 }

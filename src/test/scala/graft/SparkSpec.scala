@@ -1,5 +1,8 @@
 package graft
 
+import java.io.File
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,27 +11,28 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  def withTempDirs[A](prefixes: String*)(body: Seq[String] => A): A =
+    SparkSpec.withTempDirs(prefixes: _*)(body)
+}
+
+object SparkSpec {
+  /** Catalog state of the specs (saveAsTable for bucketing tests), kept out
+    * of the repo's tracked files and emptied at each session start. */
+  val warehouse: File = new File("target/graft-warehouse").getAbsoluteFile
+
   /** Runs `body` with one fresh temp dir per prefix, all deleted afterwards
     * whether `body` passes or throws. */
   def withTempDirs[A](prefixes: String*)(body: Seq[String] => A): A = {
     val dirs = prefixes.map(p => java.nio.file.Files.createTempDirectory(p).toFile)
     try body(dirs.map(_.toString))
-    finally dirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    finally dirs.foreach(FileUtils.deleteDirectory)
   }
-}
 
-object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    FileUtils.deleteDirectory(warehouse)
+    val s = GraftSession.builder(cores = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // keep catalog state (saveAsTable for bucketing tests) out of the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -257,27 +257,27 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("writeDailyUpsert: micro-batches land as overwritable day partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-sink").toString
-    val cp = java.nio.file.Files.createTempDirectory("stream-cp").toString
-    val input = MemoryStream[Event]
-    val q = EventStreams.writeDailyUpsert(
-      EventStreams.dailyCounts(input.toDF(), lateness = "1 hour"),
-      s"$dir/out", cp)
-    try {
-      input.addData(
-        ev(1, "2024-01-01 12:00:00", 1, "view", 1.0),
-        ev(5, "2024-01-01 12:30:00", 2, "click", 9.0))
-      q.processAllAvailable()
-      // batch 2 updates ONLY the view group — the click group's partition
-      // must survive (update-mode batches carry just the changed groups, so
-      // partitioning must be by the full (day, event_type) key)
-      input.addData(ev(2, "2024-01-01 13:00:00", 1, "view", 2.0))
-      q.processAllAvailable()
-      val out = spark.read.parquet(s"$dir/out")
-      val day = out.filter($"day" === "2024-01-01").collect()
-        .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("n_events"))
-        .toMap
-      assert(day === Map("view" -> 2L, "click" -> 1L))
-    } finally q.stop()
+    withTempDirs("stream-sink", "stream-cp") { case Seq(dir, cp) =>
+      val input = MemoryStream[Event]
+      val q = EventStreams.writeDailyUpsert(
+        EventStreams.dailyCounts(input.toDF(), lateness = "1 hour"),
+        s"$dir/out", cp)
+      try {
+        input.addData(
+          ev(1, "2024-01-01 12:00:00", 1, "view", 1.0),
+          ev(5, "2024-01-01 12:30:00", 2, "click", 9.0))
+        q.processAllAvailable()
+        // batch 2 updates ONLY the view group — the click group's partition
+        // must survive (update-mode batches carry just the changed groups, so
+        // partitioning must be by the full (day, event_type) key)
+        input.addData(ev(2, "2024-01-01 13:00:00", 1, "view", 2.0))
+        q.processAllAvailable()
+        val out = spark.read.parquet(s"$dir/out")
+        val day = out.filter($"day" === "2024-01-01").collect()
+          .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("n_events"))
+          .toMap
+        assert(day === Map("view" -> 2L, "click" -> 1L))
+      } finally q.stop()
+    }
   }
 }

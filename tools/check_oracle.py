@@ -3,6 +3,9 @@
 SparkEntry.oracleSql in DuckDB over the same parquet tables and compare
 with the Spark result parquet dumped by graft.Verify.
 
+Every name in oracle_sql.json must have a dump: a registered query with
+no Spark output is a FAIL. Exit status 1 on any FAIL.
+
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
 import sys, json, glob, os
@@ -35,10 +38,12 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    # every registered name AND every dumped directory: a query whose dump
+    # is missing (its builder threw) fails instead of going uncounted
+    dirs = {n for n in os.listdir(out_dir)
+            if os.path.isdir(os.path.join(out_dir, n))}
+    for name in sorted(dirs | set(oracle)):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
-            continue
         files = glob.glob(f"{d}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output"); n_fail += 1; continue
