@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
  * — every term an integer.
  *
  * Scale shape: one hash aggregate collapses the table to (score, n, pos)
- * value groups; "items before" is the exclusive prefix sum of group
- * sizes in score order — [[TwoPhaseScan]]'s distributed scaffold (range
- * partition + driver offsets), NEVER a global single-reducer window; one final metadata-sized aggregate emits the
- * numerator/denominator pair in DECIMAL(38,0) (rank sums overflow longs
- * at warehouse row counts). The q171 lift table is the per-decile view
+ * value groups; "items before" is the running sum of group sizes in
+ * score order minus the group's own size — [[TwoPhaseScan.cumSums]]'
+ * two-phase scan, NEVER a global single-reducer window; one final
+ * aggregate emits the numerator/denominator pair in DECIMAL(38,0) (rank
+ * sums overflow longs at warehouse row counts). The q171 lift table is the per-decile view
  * of the same ordering; this is its single-scalar summary.
  */
 object Auc {
@@ -40,31 +40,19 @@ object Auc {
       .filter(col("s").isNotNull && labelCol.isNotNull)
       .groupBy(col("s"))
       .agg(count(lit(1)).as("n_g"), sum(col("pos")).as("pos_g"))
-    // "items before" = the exclusive prefix sum of group sizes in score
-    // order, straight on the shared two-phase scaffold (one staged pass,
-    // no dummy shard budget, no table-sized pin — the one-row result is
-    // aggregated inside the staged scope and pinned trivially)
-    TwoPhaseScan.scan(groups, Seq(col("s")), sum(col("n_g")), _ + _) {
-      (parted, offsetsDf, _) =>
-        val local = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__pid")).orderBy(col("s"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, -1)
-        CacheScope.pin(parted
-          .join(offsetsDf, Seq("__pid"))
-          .withColumn("before_g",
-            coalesce(sum(col("n_g")).over(local), lit(0L)) + col("__off"))
-          .agg(sum(col("pos_g")).cast(d).as("n_pos"),
-            (sum(col("n_g")) - sum(col("pos_g"))).cast(d).as("n_neg"),
-            sum(col("pos_g").cast(d) *
-              (col("before_g").cast(d) * 2 + col("n_g") + 1))
-              .cast(d).as("two_rank_sum"))
-          .select(col("n_pos").cast("long").as("n_pos"),
-            col("n_neg").cast("long").as("n_neg"),
-            (col("two_rank_sum") - col("n_pos") * (col("n_pos") + 1))
-              .cast(d).cast("string").as("auc_num"),
-            (col("n_pos") * col("n_neg") * 2).cast(d).cast("string")
-              .as("auc_den")))
-    }
+    TwoPhaseScan.cumSums(groups, Seq(col("s")),
+        Seq(("n_g", "__cum", "__tot")))
+      .withColumn("before_g", col("__cum") - col("n_g"))
+      .agg(sum(col("pos_g")).cast(d).as("n_pos"),
+        (sum(col("n_g")) - sum(col("pos_g"))).cast(d).as("n_neg"),
+        sum(col("pos_g").cast(d) *
+          (col("before_g").cast(d) * 2 + col("n_g") + 1))
+          .cast(d).as("two_rank_sum"))
+      .select(col("n_pos").cast("long").as("n_pos"),
+        col("n_neg").cast("long").as("n_neg"),
+        (col("two_rank_sum") - col("n_pos") * (col("n_pos") + 1))
+          .cast(d).cast("string").as("auc_num"),
+        (col("n_pos") * col("n_neg") * 2).cast(d).cast("string")
+          .as("auc_den"))
   }
 }

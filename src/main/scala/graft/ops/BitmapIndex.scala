@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
  * real bitmap index is.
  *
  * 100 TB shape: numbering is the standard two-phase scan (range shuffle
- * + #partitions driver offsets); the bitmap build is ONE hash
+ * + per-partition offsets); the bitmap build is ONE hash
  * aggregation with map-side combine (bit_or is a monoid); the algebra
  * joins bitmaps block-on-block — both sides already hash-partitioned by
  * block, and any one predicate's bitmap is rows/64 words.

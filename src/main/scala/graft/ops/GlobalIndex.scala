@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,75 +10,33 @@ import org.apache.spark.sql.functions._
  * the whole table into ONE reducer (Spark even warns); at 100 TB that is
  * not slow, it is dead.
  *
- * The scalable shape is the classic two-phase index:
- *   1. range-repartition on the order key (sampled bounds → partitions
- *      are ordered AND balanced), sort within partitions;
- *   2. count rows per partition (per-partition aggregate — no row
- *      movement), prefix-sum the counts into per-partition OFFSETS on the
- *      driver (#partitions values, not rows — the same bounded-driver
- *      idiom as Sampling's starved-strata collect);
- *   3. local row_number within each partition + broadcast-joined offset.
+ * The scalable shape is the two-phase index: the row's 0-based index is
+ * its running count minus one, computed by [[TwoPhaseScan.cumSums]] —
+ * range-partition on the order key, count rows per partition, fold the
+ * counts into per-partition offsets (#partitions rows, broadcast back)
+ * and add each row's in-partition position.
  *
  * Every row is numbered exactly once, no global single-reducer sort ever
  * runs, and the result equals the naive plan row-for-row (the q60 oracle
- * IS the naive plan, in DuckDB).
+ * IS the naive plan, in DuckDB). The result is a lazy plan: nothing runs
+ * until the caller's action, and nothing is cached.
  */
 object GlobalIndex {
 
   /** Add `idxCol` = 0-based dense global index of the row under
     * `ORDER BY orderCols`. The caller makes the order total (unique last
-    * column) — the same contract as any deterministic sort.
-    *
-    * The shuffled stage is cache-scoped so the counts pass and the
-    * numbering pass see one row→partition assignment, and the result is
-    * pinned (caller owns `unpersist()`). In a warehouse job you'd fold
-    * this into the write — index and persist to storage in the same pass
-    * — rather than pin a table-sized result; the pin serves query-shaped
-    * consumers at the gate scale. (Recompute after eviction is safe:
-    * range sampling is seed-deterministic, so offsets stay valid.) */
+    * column) — the same contract as any deterministic sort. */
   def withGlobalIndex(df: DataFrame, idxCol: String,
                       orderCols: Column*): DataFrame =
-    // the counts pass and the numbering pass must observe the SAME
-    // row→partition assignment — TwoPhaseScan stages the shuffle output
-    // (materialized during the scope, released after the pinned result)
-    TwoPhaseScan.scan(df, orderCols, count(lit(1)), _ + _) {
-      (parted, offsetsDf, _) =>
-        val local = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
-        CacheScope.pin(parted
-          .join(offsetsDf, Seq("__pid"))
-          .withColumn(idxCol,
-            (row_number().over(local).cast("long") - 1) + col("__off"))
-          .drop("__pid", "__off", "__has_off"))
-    }
+    withIndexAndCount(df, idxCol, "__n", orderCols: _*).drop("__n")
 
-  /** Index-and-write in ONE pass: the warehouse-job shape promised in
-    * [[withGlobalIndex]]'s doc — number the rows and persist them to
-    * `path` without ever pinning a table-sized result in cache.
-    *
-    * Mechanics: range-repartition + in-partition sort once, then
-    * `zipWithIndex` over that RDD. zipWithIndex is exactly the two-phase
-    * prefix-sum — a count job over the shuffled partitions followed by a
-    * map job adding (partition offset + local position) — and both jobs
-    * hang off the SAME shuffle dependency, so the shuffle map stage runs
-    * once and the second job reads the existing shuffle files. No cache,
-    * no second shuffle, no driver-side rows beyond #partitions counts.
-    * The written table equals `withGlobalIndex` row-for-row (spec-gated:
-    * the parquet round-trip is compared against the pinned variant). */
-  def writeIndexed(df: DataFrame, path: String, idxCol: String,
-                   orderCols: Column*): Unit = {
-    val spark = df.sparkSession
-    val sorted = df
-      .repartitionByRange(
-        spark.sessionState.conf.numShufflePartitions, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+
-        org.apache.spark.sql.types.StructField(
-          idxCol, org.apache.spark.sql.types.LongType, nullable = false))
-    val indexed = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-    }
-    spark.createDataFrame(indexed, schema)
-      .write.mode("overwrite").parquet(path)
-  }
+  /** [[withGlobalIndex]] plus `countCol` = the row count of df, on every
+    * row — the N that rank arithmetic (deciles, cut ranks) divides by,
+    * read from the same scan instead of a separate count branch. */
+  def withIndexAndCount(df: DataFrame, idxCol: String, countCol: String,
+                        orderCols: Column*): DataFrame =
+    TwoPhaseScan.cumSums(df.withColumn("__one", lit(1L)), orderCols,
+        Seq(("__one", idxCol, countCol)))
+      .withColumn(idxCol, col(idxCol) - 1L)
+      .drop("__one")
 }

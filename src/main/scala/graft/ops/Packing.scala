@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -14,15 +13,10 @@ import org.apache.spark.sql.functions._
  *
  * The naive plan is `sum(tokens) OVER (ORDER BY key)` — a global-order
  * window that collapses the table into ONE reducer, the same scale
- * killer [[GlobalIndex]] documents for row numbering. This is the same
- * two-phase fix, for SUMS:
- *
- *   1. range-repartition on the order key + sort within partitions
- *      (sampled bounds → ordered AND balanced partitions);
- *   2. per-partition token totals (no row movement), prefix-summed into
- *      per-partition OFFSETS on the driver (#partitions longs);
- *   3. per-partition exclusive running sum (a PARTITIONED window — safe)
- *      + the broadcast offset = the exact global running start.
+ * killer [[GlobalIndex]] documents for row numbering. Here the running
+ * token sum is [[TwoPhaseScan.cumSums]]' two-phase scan (range
+ * partition, per-partition offsets, partitioned local window), and the
+ * exclusive start is that inclusive sum minus the document's own tokens.
  *
  * Equals the naive single-reducer plan row-for-row; the q118 oracle IS
  * that naive plan, in DuckDB.
@@ -34,41 +28,18 @@ object Packing {
    * total) so each shard holds consecutive documents whose token
    * intervals start inside one `budget`-sized window. Adds
    * `running_start` (the exclusive global token prefix-sum) and
-   * `shard_id`; `tokenCol` must be a non-negative integral count.
+   * `shard_id`; `tokenCol` must be a non-negative integral count (a null
+   * count adds no tokens).
    */
   def packByBudget(df: DataFrame, tokenCol: Column, budget: Long,
                    orderCols: Column*): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
-    packByBudgetWithTotal(df, tokenCol, _ => budget, orderCols: _*)._1
-  }
-
-  /**
-   * [[packByBudget]] with the budget derived FROM the corpus's total
-   * weight — which is already sitting in the per-partition sums the
-   * two-phase scan collects, so callers that need `total` (q158's
-   * systematic step = total/50) get it WITHOUT a second table scan.
-   * Returns (packed frame, total weight).
-   */
-  def packByBudgetWithTotal(df: DataFrame, tokenCol: Column,
-                            budgetOf: Long => Long,
-                            orderCols: Column*): (DataFrame, Long) = {
-    val tokenized = df.withColumn("__tok", tokenCol.cast("long"))
-    // sums pass and numbering pass must see one row→partition assignment
-    // (TwoPhaseScan stages the shuffle output across both)
-    TwoPhaseScan.scan(tokenized, orderCols, sum(col("__tok")), _ + _) {
-      (parted, offsetsDf, totalOpt) =>
-        val total = totalOpt.getOrElse(0L)
-        val budget = budgetOf(total)
-        require(budget > 0, s"budget must be positive: $budget")
-        val local = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        (CacheScope.pin(parted
-          .join(offsetsDf, Seq("__pid"))
-          .withColumn("running_start",
-            coalesce(sum(col("__tok")).over(local), lit(0L)) + col("__off"))
-          .withColumn("shard_id",
-            expr(s"CAST(running_start DIV ${budget}L AS BIGINT)"))
-          .drop("__pid", "__off", "__has_off", "__tok")), total)
-    }
+    val tokenized = df.withColumn("__tok",
+      coalesce(tokenCol.cast("long"), lit(0L)))
+    TwoPhaseScan.cumSums(tokenized, orderCols, Seq(("__tok", "__cum", "__tot")))
+      .withColumn("running_start", col("__cum") - col("__tok"))
+      .withColumn("shard_id",
+        expr(s"CAST(running_start DIV ${budget}L AS BIGINT)"))
+      .drop("__tok", "__cum", "__tot")
   }
 }

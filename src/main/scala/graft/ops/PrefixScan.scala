@@ -1,22 +1,17 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
  * Distributed order-statistics scans — running aggregates over a GLOBAL
  * total order without the single-reducer window Spark's
- * `agg OVER (ORDER BY …)` (no PARTITION BY) degenerates to. Same
- * two-phase shape as [[Packing.packByBudget]]'s running sum and
- * [[GlobalIndex]]'s row numbering, generalized to MAX:
- *
- *   1. range-repartition on the order key + in-partition sort (sampled
- *      bounds → partitions are ordered AND balanced);
- *   2. per-partition maxima, prefix-maxed on the driver into
- *      per-partition OFFSETS (#partitions values — metadata);
- *   3. in-partition exclusive running max (a PARTITIONED window — safe)
- *      combined with the broadcast offset.
+ * `agg OVER (ORDER BY …)` (no PARTITION BY) degenerates to. The running
+ * MAX rides [[TwoPhaseScan]]'s two-phase scan, the same one behind
+ * [[Packing.packByBudget]]'s running sum and [[GlobalIndex]]'s row
+ * numbering: range partition, per-partition maxima folded into
+ * per-partition offsets, in-partition exclusive running max combined
+ * with the broadcast offset.
  *
  * The EXCLUSIVE scan (strictly-preceding rows) is what event-time
  * watermark semantics need: an event compares against the high-water
@@ -29,24 +24,11 @@ object PrefixScan {
    * in the `ORDER BY orderCols` total order (null for the global first
    * row — nothing precedes it). `valueCol` must be long-typed; the
    * caller makes the order total (ties would make "before" ambiguous).
+   * Null values are transparent: they never count as a 0.
    */
   def exclusiveRunningMax(df: DataFrame, valueCol: Column, outCol: String,
-                          orderCols: Column*): DataFrame = {
-    val valued = df.withColumn("__v", valueCol.cast("long"))
-    // both passes see one row→partition assignment (TwoPhaseScan stages the
-    // shuffle); an ALL-NULL partition's null max contributes NOTHING to
-    // the prefix — TwoPhaseScan's Option fold never fabricates an identity
-    TwoPhaseScan.scan(valued, orderCols, max(col("__v")), math.max) {
-      (parted, offsetsDf, _) =>
-        val local = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        CacheScope.pin(parted
-          .join(offsetsDf, Seq("__pid"))
-          // greatest() skips nulls: local-only, offset-only and
-          // global-first (both null) rows all come out right
-          .withColumn(outCol, greatest(max(col("__v")).over(local),
-            when(col("__has_off"), col("__off"))))
-          .drop("__pid", "__v", "__off", "__has_off"))
-    }
-  }
+                          orderCols: Column*): DataFrame =
+    TwoPhaseScan.exclusiveMax(df.withColumn("__v", valueCol.cast("long")),
+        orderCols, "__v", outCol)
+      .drop("__v")
 }

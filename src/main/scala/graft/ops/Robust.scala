@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
  *
  * The p-th cut point is the value at rank ⌈p·n⌉ (1-indexed) in the total
  * order — an exact order statistic, not an interpolated percentile, so
- * it is reproducible across engines. Ranks come from
- * [[GlobalIndex.withGlobalIndex]]'s two-phase numbering (range shuffle +
- * driver offsets — no single-reducer window); the two cut values reduce
- * to ONE metadata row that broadcasts back over the data for clamping.
+ * it is reproducible across engines. Ranks and the row count come from
+ * [[GlobalIndex.withIndexAndCount]]'s two-phase numbering (range shuffle
+ * + per-partition offsets — no single-reducer window); the two cut
+ * values reduce to ONE metadata row that broadcasts back over the data
+ * for clamping.
  *
  * Sums of clamped values ride DECIMAL (quantized, order-independent) —
  * the repo's standard answer to double-summation nondeterminism.
@@ -33,21 +34,15 @@ object Robust {
     require(0 < pLoMille && pLoMille < pHiMille && pHiMille < 1000,
       s"need 0 < lo < hi < 1000 per-mille: $pLoMille, $pHiMille")
     val valued = df.select((valueCol.as("__v") +: orderCols): _*)
-    // pinned by the op (q60 pattern): three consumers below read one
-    // materialization; the harness releases per-query via clearCache
-    val indexed = GlobalIndex.withGlobalIndex(valued, "__idx",
+    // rank = __idx + 1; cut ranks are ⌈p·n/1000⌉, over the index's own
+    // row count column
+    val indexed = GlobalIndex.withIndexAndCount(valued, "__idx", "__n",
       (col("__v") +: orderCols): _*)
-    // rank = __idx + 1; cut ranks are ⌈p·n/1000⌉ — one metadata row
-    val cuts = indexed.agg(count(lit(1)).as("n"))
-      .withColumn("__klo", expr(s"($pLoMille * n + 999) div 1000"))
-      .withColumn("__khi", expr(s"($pHiMille * n + 999) div 1000"))
-    val cutVals = indexed.crossJoin(broadcast(cuts))
-      .agg(
-        max(when(col("__idx") + 1L === col("__klo"), col("__v")))
-          .as("lo"),
-        max(when(col("__idx") + 1L === col("__khi"), col("__v")))
-          .as("hi"),
-        count(lit(1)).as("n"))
+    def cutAt(pMille: Int): Column =
+      max(when(col("__idx") + 1L === expr(s"($pMille * __n + 999) div 1000"),
+        col("__v")))
+    val cutVals = indexed.agg(cutAt(pLoMille).as("lo"),
+      cutAt(pHiMille).as("hi"), count(lit(1)).as("n"))
     val clamped = indexed.crossJoin(broadcast(cutVals))
       .withColumn("__c", least(greatest(col("__v"), col("lo")),
         col("hi")))

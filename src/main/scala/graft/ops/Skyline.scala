@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
  *      dominated by that x's max unless they ARE the max);
  *   2. running max of y over STRICTLY GREATER x = the
  *      [[PrefixScan.exclusiveRunningMax]] two-phase scan ordered by
- *      x DESC (range shuffle, #partitions driver offsets, partitioned
+ *      x DESC (range shuffle, per-partition offsets, partitioned
  *      local window);
  *   3. keep x-groups whose max-y strictly exceeds that high-water mark
  *      (nothing to the right is ≥ in y ⇒ nothing dominates).
@@ -29,7 +29,7 @@ object Skyline {
 
   /**
    * Skyline of the (x, y) projection of `df` — distinct non-dominated
-   * points as (x, y). BOTH dimensions long-typed: the two-phase scaffold
+   * points as (x, y). BOTH dimensions long-typed: the two-phase scan
    * folds long partials, and integer comparisons keep the frontier exact
    * (callers quantize doubles — e.g. cents — before calling, as every
    * exact op in the repo does).
@@ -37,7 +37,7 @@ object Skyline {
   def pareto2d(df: DataFrame, x: Column, y: Column): DataFrame = {
     val perX = df.select(x.as("x"), y.as("y"))
       .groupBy(col("x")).agg(max(col("y")).as("y"))
-    // y rides through the long-based scaffold: order by x DESC, running
+    // y rides through the long-based scan: order by x DESC, running
     // max over strictly-preceding rows = max y among strictly-greater x
     val scanned = PrefixScan.exclusiveRunningMax(
       perX, col("y"), "hwm", col("x").desc)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -30,8 +29,8 @@ import org.apache.spark.sql.functions._
  * from the published exact sums.
  *
  * Spark shape — NO single-reducer rank window: per-variable value
- * counts (one hash agg, NDV-sized), then `|{x < v}|` as the
- * [[TwoPhaseScan]] exclusive prefix sum over the SORTED DISTINCT
+ * counts (one hash agg, NDV-sized), then `|{x < v}|` from the
+ * [[TwoPhaseScan.cumSums]] running count over the SORTED DISTINCT
  * VALUES (NDV rows, range-partitioned), joined back to the row frame.
  * The data is scanned once per variable + once for the final sums; all
  * rank arithmetic happens on NDV-scale frames.
@@ -49,18 +48,11 @@ object Spearman {
   private def rank2ByValue(df: DataFrame, v: Column): DataFrame = {
     val counts = df.select(v.as("value")).groupBy(col("value"))
       .agg(count(lit(1)).as("cnt"))
-    TwoPhaseScan.scan(counts, Seq(col("value")), sum(col("cnt")), _ + _) {
-      (parted, offsetsDf, _) =>
-        val local = Window.partitionBy(col("__pid"))
-          .orderBy(col("value"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        CacheScope.pin(parted
-          .join(offsetsDf, Seq("__pid"))
-          .withColumn("__less",
-            coalesce(sum(col("cnt")).over(local), lit(0L)) + col("__off"))
-          .select(col("value"),
-            (lit(2L) * col("__less") + col("cnt") + 1L).as("rank2")))
-    }
+    TwoPhaseScan.cumSums(counts, Seq(col("value")),
+        Seq(("cnt", "__cum", "__tot")))
+      // |{x < v}| = __cum − cnt, so 2·|{x < v}| + cnt + 1 = 2·__cum − cnt + 1
+      .select(col("value"),
+        (lit(2L) * col("__cum") - col("cnt") + 1L).as("rank2"))
   }
 
   /**

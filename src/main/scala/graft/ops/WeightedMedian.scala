@@ -14,13 +14,11 @@ import org.apache.spark.sql.functions._
  * Shape for 100 TB: the naive plan windows `PARTITION BY group ORDER BY
  * value`, so its parallelism is the GROUP COUNT forever (3 return flags
  * → 3 tasks on a 1000-executor cluster). Here the cumulative weight is
- * instead [[TwoPhaseScan]]'s distributed prefix sum over the ONE global
- * (group, value) order — full parallelism regardless of group count
- * (the fourth instantiation of the scaffold, after [[GlobalIndex]],
- * [[Packing]] and [[PrefixScan]]/[[Auc]]): the per-group cumulative is
- * the global running sum minus the group's exclusive start, where the
- * #groups start offsets come from one hash aggregate plus a
- * metadata-sized (#groups-row) prefix window.
+ * instead [[TwoPhaseScan.cumSums]]' distributed running sum over the
+ * ONE global (group, value) order — full parallelism regardless of group
+ * count: the per-group cumulative is the global running sum minus the
+ * group's exclusive start, where the #groups start offsets come from one
+ * hash aggregate plus a metadata-sized (#groups-row) prefix window.
  *
  * Input contract: `weightCol` long-typed non-negative, `groupCol` and
  * `valueCol` non-null (null values carry no order; callers pre-filter).
@@ -38,30 +36,22 @@ object WeightedMedian {
     val base = df
       .groupBy(col(groupCol), col(valueCol))
       .agg(sum(col(weightCol)).as("__w"))
-    TwoPhaseScan.scan(base, Seq(col(groupCol), col(valueCol)),
-      sum(col("__w")), _ + _) { (parted, offsetsDf, _) =>
-      val local = Window.partitionBy(col("__pid"))
-        .orderBy(col(groupCol), col(valueCol))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // global running weight over the one total (group, value) order;
-      // __off's 0-when-absent is the + identity (additive caller)
-      val cumGlobal = parted.join(offsetsDf, Seq("__pid"))
-        .withColumn("__cw_g", sum(col("__w")).over(local) + col("__off"))
-      // per-group totals + exclusive group starts: #groups rows from the
-      // staged frame (no re-scan), prefix-folded in one metadata-sized
-      // window — bounded by the group domain, same argument as the
-      // bounded-rank windows
-      val wf = Window.orderBy(col(groupCol))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val starts = parted.groupBy(col(groupCol))
-        .agg(sum(col("__w")).as("__total"))
-        .withColumn("__start", coalesce(sum(col("__total")).over(wf), lit(0L)))
-      CacheScope.pin(cumGlobal
-        .join(broadcast(starts), Seq(groupCol))
-        .filter((col("__cw_g") - col("__start")) * 2 >= col("__total"))
-        .groupBy(col(groupCol))
-        .agg(min(col(valueCol)).as("median_value"),
-          max(col("__total")).as("total_weight")))
-    }
+    // global running weight over the one total (group, value) order
+    val cumGlobal = TwoPhaseScan.cumSums(base,
+      Seq(col(groupCol), col(valueCol)), Seq(("__w", "__cw_g", "__all")))
+    // per-group totals + exclusive group starts: #groups rows, prefix-
+    // folded in one metadata-sized window — bounded by the group domain,
+    // same argument as the bounded-rank windows
+    val wf = Window.orderBy(col(groupCol))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val starts = base.groupBy(col(groupCol))
+      .agg(sum(col("__w")).as("__total"))
+      .withColumn("__start", coalesce(sum(col("__total")).over(wf), lit(0L)))
+    cumGlobal
+      .join(broadcast(starts), Seq(groupCol))
+      .filter((col("__cw_g") - col("__start")) * 2 >= col("__total"))
+      .groupBy(col(groupCol))
+      .agg(min(col(valueCol)).as("median_value"),
+        max(col("__total")).as("total_weight"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,36 +19,30 @@ import org.apache.spark.sql.functions._
  * picked at frequency proportional to their weight, and the selected
  * count is totalWeight div S ± 1. All integer arithmetic.
  *
- * Spark shape: the running weight W_before is the [[TwoPhaseScan]]
- * exclusive prefix sum over the caller's total order — range shuffle +
- * #partitions driver offsets + a PARTITIONED local window. No
- * single-reducer `ORDER BY` window, no driver rows, one data shuffle.
+ * Spark shape: the running weight and the total come from one
+ * [[TwoPhaseScan.cumSums]] scan over the caller's total order — range
+ * shuffle + per-partition offsets + a PARTITIONED local window — and the
+ * stride is an expression over the total column. No single-reducer
+ * `ORDER BY` window, nothing collected to the driver.
  */
 object WeightedSample {
 
   /**
    * Select ~`target` rows from `df` proportional to long `weightCol`,
    * deterministic under the total order `orderCols`. Adds nothing to
-   * the schema; returns the selected subset. Weights must be ≥ 0.
+   * the schema; returns the selected subset. Weights must be ≥ 0; a
+   * null weight counts as 0.
    */
   def systematic(df: DataFrame, weightCol: Column, target: Long,
                  orderCols: Column*): DataFrame = {
     require(target >= 1, s"target must be >= 1: $target")
-    val valued = df.withColumn("__w", weightCol.cast("long"))
-    TwoPhaseScan.scan(valued, orderCols, sum(col("__w")), _ + _) {
-      (parted, offsetsDf, total) =>
-        val totalW = total.getOrElse(0L)
-        val stride = math.max(1L, totalW / target)
-        val local = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        CacheScope.pin(parted
-          .join(offsetsDf, Seq("__pid"))
-          .withColumn("__before",
-            coalesce(sum(col("__w")).over(local), lit(0L)) + col("__off"))
-          // `div` = exact integer division (Column./ is double division)
-          .filter(expr(s"(__before + __w) div ${stride}L > " +
-            s"__before div ${stride}L"))
-          .drop("__pid", "__w", "__off", "__has_off", "__before"))
-    }
+    val weighted = df.withColumn("__w",
+      coalesce(weightCol.cast("long"), lit(0L)))
+    // W_before + w is the inclusive running sum; `div` = exact integer
+    // division (Column./ is double division)
+    val stride = s"greatest(1L, __tot div ${target}L)"
+    TwoPhaseScan.cumSums(weighted, orderCols, Seq(("__w", "__cum", "__tot")))
+      .filter(expr(s"__cum div $stride > (__cum - __w) div $stride"))
+      .drop("__w", "__cum", "__tot")
   }
 }

@@ -331,15 +331,12 @@ object AnalyticsQueries {
     * naive single-reducer `row_number() OVER (ORDER BY …)` row-for-row —
     * which is exactly what the oracle runs (DuckDB can afford the global
     * sort; a 100 TB Spark job cannot, which is the point of the op). */
-  def q60GlobalIndex(spark: SparkSession, dir: String): DataFrame = {
-    // the op returns its pinned (caller-owned) result — the harness
-    // releases per-query via clearCache, same as the other pinned ops
+  def q60GlobalIndex(spark: SparkSession, dir: String): DataFrame =
     graft.ops.GlobalIndex.withGlobalIndex(
         Tables.events(spark, dir).select(col("event_id"), col("ts")),
         "gidx", col("ts"), col("event_id"))
       .select(col("event_id"), col("gidx"))
       .orderBy(col("event_id"))
-  }
 
   val q60Sql: String =
     """SELECT event_id,

@@ -150,7 +150,7 @@ object LakehouseQueries {
     * make: linear is perfect on its leading dimension and useless on
     * the trailing one; the z-curve bounds every zone in BOTH, which is
     * why OPTIMIZE ZORDER exists. Zone assignment is the two-phase
-    * global index (range partition + driver offsets), NEVER a
+    * global index (range partition + per-partition offsets), NEVER a
     * single-reducer window; the oracle uses the naive window + the same
     * five-step bit spread in SQL. */
   def q197ZorderPruning(spark: SparkSession, dir: String): DataFrame = {
@@ -165,16 +165,11 @@ object LakehouseQueries {
         Seq("u" -> col("u"), "d" -> col("d")))
       val su = col("max_u") >= 40L && col("min_u") <= 89L
       val sd = col("max_d") >= 19733L && col("min_d") <= 19742L
-      // pin the 1-row audit and release the table-sized index pin — the
-      // index is a pure intermediate here, unlike q60 where it IS the
-      // result (CacheScope: caller owns exactly one bounded artifact)
-      try graft.ops.CacheScope.pin(
-        stats.agg(count(lit(1)).as("n_zones"),
-            sum(when(su, 1L).otherwise(0L)).as("scan_user"),
-            sum(when(sd, 1L).otherwise(0L)).as("scan_day"),
-            sum(when(su && sd, 1L).otherwise(0L)).as("scan_box"))
-          .withColumn("layout", lit(label)))
-      finally idx.unpersist(blocking = false)
+      stats.agg(count(lit(1)).as("n_zones"),
+          sum(when(su, 1L).otherwise(0L)).as("scan_user"),
+          sum(when(sd, 1L).otherwise(0L)).as("scan_day"),
+          sum(when(su && sd, 1L).otherwise(0L)).as("scan_box"))
+        .withColumn("layout", lit(label))
     }
     audit("linear", Seq(col("u"), col("d"), col("event_id")))
       .unionByName(audit("zorder", Seq(

@@ -587,22 +587,22 @@ object MonitorQueries {
     * sum, and select every document whose interval contains a multiple
     * of step = total DIV 50 — the classic probability-proportional-to-
     * size systematic design, with ZERO randomness state (reproducible
-    * from the data alone). The prefix sum is [[graft.ops.Packing]]'s
-    * two-phase distributed scan (no single-reducer window); the oracle
-    * is the naive global-window plan in DuckDB. Selection arithmetic is
-    * all-integer: first multiple ≥ start is ((start+step−1) DIV
-    * step)·step, selected iff it lands before start+weight. */
+    * from the data alone). The prefix sum and the total are one
+    * [[graft.ops.TwoPhaseScan.cumSums]] distributed scan (no
+    * single-reducer window), and the step is an expression over the
+    * total column; the oracle is the naive global-window plan in DuckDB.
+    * Selection arithmetic is all-integer: first multiple ≥ start is
+    * ((start+step−1) DIV step)·step, selected iff it lands before
+    * start+weight. */
   def q158SystematicSample(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("n_chars"))
-    // total comes from the pack's own per-partition sums pass — no
-    // separate corpus aggregate (and no head() to NPE on an empty table)
-    val (packed, total) = graft.ops.Packing.packByBudgetWithTotal(docs,
-      col("n_chars"), tot => math.max(1L, tot / 50L), col("doc_id"))
-    val step = math.max(1L, total / 50L)
-    packed
-      .filter(expr(s"((running_start + ${step}L - 1) DIV ${step}L) " +
-        s"* ${step}L < running_start + n_chars"))
+    graft.ops.TwoPhaseScan.cumSums(docs, Seq(col("doc_id")),
+        Seq(("n_chars", "running_end", "total")))
+      .withColumn("running_start", col("running_end") - col("n_chars"))
+      .withColumn("step", greatest(lit(1L), expr("total DIV 50")))
+      .filter(expr("((running_start + step - 1) DIV step) * step" +
+        " < running_end"))
       .select(col("doc_id"), col("source"), col("n_chars"),
         col("running_start"))
       .orderBy(col("doc_id"))

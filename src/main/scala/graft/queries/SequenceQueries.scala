@@ -300,17 +300,17 @@ object SequenceQueries {
     * sort — instead the rank comes from [[graft.ops.GlobalIndex]]'s
     * two-phase distributed index and the decile from the SQL-standard
     * front-loaded-remainder formula on (rank, N), which the oracle's
-    * plain `ntile(10) OVER (ORDER BY …)` must reproduce row-for-row.
-    * Two hash aggs over users; totals ride a 1-row broadcast. */
+    * plain `ntile(10) OVER (ORDER BY …)` must reproduce row-for-row;
+    * N is the index's own row-count column. Two hash aggs over users;
+    * totals ride a 1-row broadcast. */
   def q171DecileLift(spark: SparkSession, dir: String): DataFrame = {
     val per = Tables.events(spark, dir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("conv"))
-    val indexed = graft.ops.GlobalIndex.withGlobalIndex(per, "idx",
-      col("n_events"), col("user_id"))
-    val n = per.agg(count(lit(1)).as("n_all"))
+    val indexed = graft.ops.GlobalIndex.withIndexAndCount(per, "idx",
+      "n_all", col("n_events"), col("user_id"))
     // ntile(k): first N mod k buckets take ceil(N/k) rows
     val decile = {
       val q = expr("n_all DIV 10"); val r = expr("n_all % 10")
@@ -320,8 +320,7 @@ object SequenceQueries {
           expr("(idx - (n_all % 10) * (n_all DIV 10 + 1))" +
             " DIV (n_all DIV 10)") + (r + 1))
     }
-    val byDecile = indexed.crossJoin(broadcast(n))
-      .withColumn("decile", decile)
+    val byDecile = indexed.withColumn("decile", decile)
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_users"), sum(col("conv")).as("n_conv"))
     val totals = per.agg(count(lit(1)).as("n_total"),
@@ -416,10 +415,8 @@ object SequenceQueries {
     val base = Tables.lineitem(spark, dir)
       .select(round(col("l_extendedprice") * 100).cast("long").as("cents"),
         col("l_orderkey"), col("l_linenumber"))
-    val indexed = graft.ops.GlobalIndex.withGlobalIndex(base, "idx",
-      col("cents"), col("l_orderkey"), col("l_linenumber"))
-    val n = base.agg(count(lit(1)).as("n_all"))
-    indexed.crossJoin(broadcast(n))
+    graft.ops.GlobalIndex.withIndexAndCount(base, "idx", "n_all",
+        col("cents"), col("l_orderkey"), col("l_linenumber"))
       .withColumn("bucket", expr("(idx * 20) DIV n_all"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_rows"),

@@ -20,9 +20,10 @@ object ShardQueries {
   /** q118 — token-budget shard packing ([[graft.ops.Packing]]): documents
     * in doc_id order are packed into 8192-token shards by the streaming
     * rule `shard = floor(running_start / budget)`; reported per shard.
-    * The engine's two-phase prefix sum (range partition → driver offsets
-    * → partitioned window) must equal the oracle's naive single-reducer
-    * global window EXACTLY — the gate is the distributed-cumsum proof. */
+    * The engine's two-phase prefix sum (range partition → per-partition
+    * offsets → partitioned window) must equal the oracle's naive
+    * single-reducer global window EXACTLY — the gate is the
+    * distributed-cumsum proof. */
   def q118ShardPacking(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -179,8 +180,10 @@ object ShardQueries {
     val candTok = docs.filter(!isRef)
       .select(col("source"), col("doc_id"), explode(grams3).as("g"))
     graft.ops.CacheScope.withStages(refGrams, candTok) {
+      // sized from the staged reference set: the serialized digest rides
+      // in every task of the probe stages, so it must not outgrow the set
       val digest = graft.ops.BloomJoin.keyFilter(refGrams, "g",
-        expectedItems = 1L << 20)
+        expectedItems = math.max(1L, refGrams.count()))
       val flagged = candTok.withColumn("maybe",
         graft.ops.BloomJoin.mightContain(digest, col("g")))
       // bloom-pass tokens that MISS the exact set are novel too

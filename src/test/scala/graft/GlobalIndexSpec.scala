@@ -35,29 +35,6 @@ class GlobalIndexSpec extends SparkSpec {
       s"found a window not partitioned by __pid in:\n$plan")
   }
 
-  test("writeIndexed round-trips row-for-row equal to withGlobalIndex, no pin") {
-    withTempDirs("graft-gidx-write") { case Seq(dir) =>
-      val df = (0 until 5000).map(i => ((i * 104729) % 37, i.toLong))
-        .toDF("k", "id").repartition(5)
-
-      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      GlobalIndex.writeIndexed(df, dir, "gidx", col("k"), col("id"))
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
-      assert(leaked.isEmpty,
-        s"writeIndexed must not pin anything; leaked: $leaked")
-
-      val written = spark.read.parquet(dir).orderBy("gidx")
-        .collect().map(r => (r.getAs[Int]("k"), r.getAs[Long]("id"),
-          r.getAs[Long]("gidx")))
-      val pinned = GlobalIndex.withGlobalIndex(df, "gidx", col("k"), col("id"))
-      val expected = pinned.orderBy("gidx")
-        .collect().map(r => (r.getAs[Int]("k"), r.getAs[Long]("id"),
-          r.getAs[Long]("gidx")))
-      pinned.unpersist()
-      assert(written.toSeq === expected.toSeq)
-    }
-  }
-
   test("empty input yields empty output, no failure") {
     val df = Seq.empty[Long].toDF("id")
     val out = GlobalIndex.withGlobalIndex(df, "gidx", col("id"))

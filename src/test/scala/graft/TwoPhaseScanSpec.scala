@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{GlobalIndex, Packing, PrefixScan}
+import graft.ops.{GlobalIndex, PrefixScan, TwoPhaseScan}
 
-/** Direct edge coverage for the shared two-phase scan scaffold
-  * (ops/TwoPhaseScan) through its three public instantiations — the
+/** Direct edge coverage for the one two-phase prefix scan
+  * (ops/TwoPhaseScan), directly and through its public operators — the
   * cases the query gates never hit: empty frames, all-null max
   * partitions, negative maxima (where a fabricated 0 identity would
-  * corrupt results), and the packer's total-from-partials contract. */
+  * corrupt results), and the total column's contract. */
 class TwoPhaseScanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,17 +37,17 @@ class TwoPhaseScanSpec extends SparkSpec {
       Some(-3L)))
   }
 
-  test("packByBudgetWithTotal: total equals the exact weight sum; empty is 0") {
+  test("cumSums total column: the exact weight sum; empty has no rows, total 0") {
     val df = (1L to 57L).map(i => (i, i % 7)).toDF("k", "w")
-    val (packed, total) = Packing.packByBudgetWithTotal(
-      df, col("w"), _ => 10L, col("k"))
-    packed.unpersist(blocking = false)
-    assert(total === (1L to 57L).map(_ % 7).sum)
+    def scan(d: org.apache.spark.sql.DataFrame) =
+      TwoPhaseScan.cumSums(d, Seq(col("k")), Seq(("w", "cw", "total")))
+    val totals = scan(df).select("total").distinct().as[Long].collect()
+    assert(totals.toSeq === Seq((1L to 57L).map(_ % 7).sum))
 
-    val (packedE, totalE) = Packing.packByBudgetWithTotal(
-      df.filter(col("k") > 100L), col("w"), _ => 10L, col("k"))
-    assert(totalE === 0L && packedE.count() === 0L)
-    packedE.unpersist(blocking = false)
+    val empty = scan(df.filter(col("k") > 100L))
+    val totalE = empty.agg(coalesce(max(col("total")), lit(0L)))
+      .as[Long].head()
+    assert(totalE === 0L && empty.count() === 0L)
   }
 
   test("cumSums: equals the single-partition reference window, incl. totals") {
@@ -58,7 +58,7 @@ class TwoPhaseScanSpec extends SparkSpec {
       (k, k % 17L, (k % 5L) + 1L)
     }.toDF("k", "a", "b").groupBy(col("k"))
       .agg(sum(col("a")).as("a"), sum(col("b")).as("b"))
-    val got = graft.ops.TwoPhaseScan.cumSums(df, Seq(col("k")),
+    val got = TwoPhaseScan.cumSums(df, Seq(col("k")),
         Seq(("a", "ca", "ta"), ("b", "cb", "tb")))
       .orderBy(col("k")).collect()
       .map(r => (r.getLong(0), r.getLong(3), r.getLong(4), r.getLong(5),
@@ -76,11 +76,11 @@ class TwoPhaseScanSpec extends SparkSpec {
 
   test("cumSums: empty input stays empty; single row carries its own total") {
     val df = Seq((1L, 2L)).toDF("k", "a")
-    val one = graft.ops.TwoPhaseScan.cumSums(df, Seq(col("k")),
+    val one = TwoPhaseScan.cumSums(df, Seq(col("k")),
       Seq(("a", "ca", "ta"))).collect()
     assert(one.map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSeq
       === Seq((1L, 2L, 2L)))
-    val empty = graft.ops.TwoPhaseScan.cumSums(df.filter(col("k") < 0),
+    val empty = TwoPhaseScan.cumSums(df.filter(col("k") < 0),
       Seq(col("k")), Seq(("a", "ca", "ta")))
     assert(empty.count() === 0L)
   }
