@@ -23,12 +23,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  * Per-session metadata memo (round 13, guide §1/§6): a bare
  * `spark.read.parquet` re-infers the schema from footers on EVERY call
- * (~80 ms), and the spread guard's `df.rdd.getNumPartitions` fully plans
- * the scan (~65 ms more) — pure driver-side latency paid per query build,
- * per pass. Schema and spread verdict are functions of the FILES, not the
- * query, so [[load]] memoizes both per (session, path, file snapshot) and
- * hands the schema to the reader explicitly (plan-build drops to ~11 ms,
- * measured). The snapshot is [[graft.Artifacts.fingerprint]], so a
+ * (~80 ms, in a Spark job), and the spread guard's
+ * `df.rdd.getNumPartitions` fully plans the scan (~65 ms more) — pure
+ * driver-side latency paid per query build, per pass. Schema and spread
+ * verdict are functions of the FILES, not the query, so [[load]]
+ * memoizes both per (session, path, file snapshot) and hands the schema
+ * to the reader explicitly (plan-build drops to ~11 ms, measured). The
+ * memo's schema is read from the first data file's footer on the driver
+ * ([[graft.sources.DeclaredParquet.inferredSchema]]), so even a cold
+ * load starts no job inside the query builder that reads the table
+ * first. The snapshot is [[graft.Artifacts.fingerprint]], so a
  * regenerated table re-infers. This is metadata caching only (what a
  * catalog table gives you for free at 100 TB); every query still computes
  * from the parquet bytes.
@@ -74,9 +78,10 @@ object Tables {
     val key = spark.sparkContext.applicationId + "|" + path + "|" +
       Artifacts.fingerprint(path)
     val meta = metaCache.computeIfAbsent(key, _ => {
-      val df = spark.read.parquet(path)
-      TableMeta(df.schema,
-        df.rdd.getNumPartitions < spark.sparkContext.defaultParallelism,
+      val schema = graft.sources.DeclaredParquet.inferredSchema(spark, path)
+      TableMeta(schema,
+        spark.read.schema(schema).parquet(path).rdd.getNumPartitions <
+          spark.sparkContext.defaultParallelism,
         pathBytes(path))
     })
     val df = spark.read.schema(meta.schema).parquet(path)

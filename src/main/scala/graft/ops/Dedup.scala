@@ -236,9 +236,7 @@ object Dedup {
 
   /** Verified near-dup pairs WITHIN a prebuilt index — the candidate +
     * verify core of [[minhashLshPairs]] over caller-staged artifacts:
-    * LAZY (no pin, no staging here), so a pipeline that derives several
-    * pair sets from one batch index (graft.streaming.IngestPipeline)
-    * computes the signatures once. */
+    * LAZY (no pin, no staging here). */
   def lshPairsWithin(idx: MinhashIndex, threshold: Double,
                      maxBucket: Int = 1000): DataFrame = {
     val sigs = idx.bands
@@ -271,12 +269,17 @@ object Dedup {
                         n: Int = 3, k: Int = 64,
                         bands: Int = 16): MinhashIndex = {
     val base = hashedShingleSets(corpus, idCol, textCol, n)
-    val bandRows = base
-      .withColumn("sig", minhashSignature(col("ih"), k))
-      .withColumn("band", explode(lshBands(col("sig"), k, bands)))
-      .select(col("id"), col("band.band_idx"), col("band.band_hash"))
-    MinhashIndex(bandRows, base)
+    MinhashIndex(
+      signatureBands(base.withColumn("sig", minhashSignature(col("ih"), k)),
+        k, bands),
+      base)
   }
+
+  /** The (id, band_idx, band_hash) band rows of a frame carrying each
+    * doc's MinHash signature in column `sig` — a map-side projection. */
+  def signatureBands(signed: DataFrame, k: Int, bands: Int): DataFrame =
+    signed.select(col("id"), explode(lshBands(col("sig"), k, bands)).as("band"))
+      .select(col("id"), col("band.band_idx"), col("band.band_hash"))
 
   /**
    * Near-dup pairs of a NEW ingest batch against an indexed corpus — the
@@ -304,8 +307,7 @@ object Dedup {
   /** Verified (new_id, corpus_id, jaccard) pairs of a prebuilt batch
     * index against a corpus index — the core of
     * [[minhashLshPairsIncremental]] over caller-staged artifacts; LAZY
-    * like [[lshPairsWithin]], for pipelines deriving several pair sets
-    * from one batch index. */
+    * like [[lshPairsWithin]]. */
   def lshPairsAgainst(newIdx: MinhashIndex, corpus: MinhashIndex,
                       threshold: Double): DataFrame = {
     val pairs = newIdx.bands
@@ -326,6 +328,69 @@ object Dedup {
         col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
+  }
+
+  /**
+   * The ids of `batch` docs with a verified near-dup (Jaccard ≥ threshold)
+   * in the batch itself or in any of `refs` — the drop set of an ingest
+   * batch, found with ONE band join instead of one candidate + verify
+   * pipeline per reference. The reference band table is a tagged union:
+   *
+   *  - tier 0, the batch's own bands, matched only where the reference id
+   *    is LOWER than the new id (of an internal pair, the higher id drops —
+   *    the pairs of [[lshPairsWithin]]);
+   *  - tier i ≥ 1, `refs(i - 1)`'s bands, matched where the ids differ (a
+   *    re-ingested id is not its own duplicate — the pairs of
+   *    [[lshPairsAgainst]]).
+   *
+   * Candidates are distinct (new_id, tier, ref_id) triples, verified with
+   * one join against the tagged union of the tiers' `base` tables keyed by
+   * (tier, id): ids may repeat across tiers, and each candidate is checked
+   * against the text of the tier it collided in. Reference rows that
+   * repeat (a roll-up's duplicate window) change no verdict.
+   *
+   * Tier 0 keeps [[lshPairsWithin]]'s bucket cap: a bucket of more than
+   * `maxBucket` batch rows yields no internal pair. Each doc has one row
+   * per band index, so a bucket of a `batchRows`-row batch holds at most
+   * `batchRows` rows, and at `batchRows ≤ maxBucket` the cap cannot bind:
+   * its bucket-count aggregate is then left out of the plan. LAZY: no job
+   * runs and nothing is cached before the caller's action.
+   */
+  def lshDropIds(batch: MinhashIndex, refs: Seq[MinhashIndex],
+                 threshold: Double, batchRows: Long,
+                 maxBucket: Int = 1000): DataFrame = {
+    val own =
+      if (batchRows <= maxBucket) batch.bands
+      else batch.bands.join(
+        batch.bands.groupBy(col("band_idx"), col("band_hash"))
+          .agg(count(lit(1)).as("bucket_n"))
+          .filter(col("bucket_n") <= maxBucket)
+          .select(col("band_idx"), col("band_hash")),
+        Seq("band_idx", "band_hash"))
+    def tagged(tiers: Seq[DataFrame], cols: Column*) =
+      tiers.zipWithIndex.map { case (df, t) =>
+        df.select(lit(t).as("tier") +: col("id").as("ref_id") +: cols: _*)
+      }.reduce(_ union _)
+    val refBands = tagged(own +: refs.map(_.bands),
+      col("band_idx"), col("band_hash"))
+    val refBase = tagged(batch.base +: refs.map(_.base),
+      col("ih").as("ih_b"), col("sz").as("sz_b"))
+    val candidates = batch.bands
+      .select(col("id").as("new_id"), col("band_idx"), col("band_hash"))
+      .join(refBands, Seq("band_idx", "band_hash"))
+      .filter(when(col("tier") === 0, col("ref_id") < col("new_id"))
+        .otherwise(col("ref_id") =!= col("new_id")))
+      .select(col("new_id"), col("tier"), col("ref_id"))
+      .dropDuplicates("new_id", "tier", "ref_id")
+    val newBase = batch.base.select(col("id").as("new_id"),
+      col("ih").as("ih_a"), col("sz").as("sz_a"))
+    candidates.join(newBase, "new_id").join(refBase, Seq("tier", "ref_id"))
+      .withColumn("inter",
+        intersectSize(col("ih_a"), col("ih_b")).cast(DoubleType))
+      .filter(col("inter") / (col("sz_a") + col("sz_b") - col("inter"))
+        >= threshold)
+      .select(col("new_id"))
+      .distinct()
   }
 
   // ------------------------------------------------------------- SimHash

@@ -2,11 +2,13 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Parquet tables read with the schema the program declares for them
@@ -33,14 +35,8 @@ object DeclaredParquet {
     * resolver; nullability not compared, file sources read all columns as
     * nullable). Extra file columns are allowed. */
   private def requireDeclared(spark: SparkSession, path: String, schema: StructType): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val file = firstDataFile(new Path(path), conf).getOrElse(
-      throw new IllegalArgumentException(s"no parquet data file under $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val found =
-      try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-        .convert(reader.getFileMetaData.getSchema)
-      finally reader.close()
+    val (file, footer) = firstFooter(spark, path)
+    val found = converter(spark).convert(footer.getSchema)
     val resolver = spark.sessionState.conf.resolver
     val mismatches = schema.fields.toSeq.flatMap { d =>
       found.fields.find(f => resolver(f.name, d.name)) match {
@@ -56,8 +52,36 @@ object DeclaredParquet {
         mismatches.mkString("; "))
   }
 
+  /** The schema a plain `spark.read.parquet(path)` infers (`mergeSchema`
+    * off), read on the driver from the first data file's footer, with no
+    * Spark job: the Spark schema the file was written with, if it carries
+    * one, else its parquet schema through the session's converter (which
+    * honours settings such as `spark.sql.legacy.parquet.nanosAsLong`).
+    * The reader makes every column nullable either way. */
+  def inferredSchema(spark: SparkSession, path: String): StructType = {
+    val (_, footer) = firstFooter(spark, path)
+    Option(footer.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(converter(spark).convert(footer.getSchema))
+  }
+
+  private def converter(spark: SparkSession) =
+    new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+
+  /** The first data file under `path` and its footer's file metadata. */
+  private def firstFooter(spark: SparkSession, path: String): (Path, FileMetaData) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val file = firstDataFile(new Path(path), conf).getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try (file, reader.getFileMetaData) finally reader.close()
+  }
+
   /** The first file a parquet read of `root` would scan: Spark skips names
-    * starting with `_` or `.` (`_SUCCESS`, checksums, `_temporary`). */
+    * starting with `.`, and names starting with `_` unless they hold a `=`
+    * (`_SUCCESS`, checksums and `_temporary` go; a partition dir such as
+    * `__tier=doc` stays). */
   private def firstDataFile(root: Path,
                             conf: org.apache.hadoop.conf.Configuration): Option[Path] = {
     val fs = root.getFileSystem(conf)
@@ -65,7 +89,7 @@ object DeclaredParquet {
     val files = fs.listFiles(root, true)
     Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath).find { f =>
       !f.toUri.getPath.stripPrefix(base).split('/')
-        .exists(s => s.startsWith("_") || s.startsWith("."))
+        .exists(s => (s.startsWith("_") && !s.contains("=")) || s.startsWith("."))
     }
   }
 }

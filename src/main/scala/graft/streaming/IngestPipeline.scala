@@ -5,26 +5,30 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
   StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Dedup
 import graft.ops.Dedup.MinhashIndex
+import graft.sources.DeclaredParquet
 
 /**
  * The streaming LLM-ingest pipeline — the gated pieces wired into ONE
  * Structured Streaming flow (SURVEY §2.9's north star made real):
  *
  *   micro-batch of new docs
- *     → batch-internal near-dup drop  (minhashLshPairs on the batch)
- *     → cross-corpus near-dup drop    (minhashLshPairsIncremental vs the
- *                                      STORED index — O(batch) per ingest)
- *     → decontamination               (same incremental engine vs the
- *                                      PROTECTED index: frozen val/test +
- *                                      benchmark docs, disjoint from the
- *                                      train index)
+ *     → staged once: hashed shingle sets + MinHash signatures
+ *     → ONE tagged LSH probe ([[Dedup.lshDropIds]]) finds the drop set of
+ *       all three rules at once:
+ *         batch-internal near-dups  (the batch's own bands),
+ *         cross-corpus near-dups    (the STORED index — O(batch) per
+ *                                    ingest),
+ *         decontamination           (the PROTECTED index: frozen val/test
+ *                                    + benchmark docs, disjoint from the
+ *                                    train index)
  *     → ONE multi-tier store write: survivors (tier `doc`) AND their
  *       signatures (tiers `bands`/`base` — the index-UPDATE step: batch
  *       b+1 dedups against batch b's survivors) land in a single
- *       partitioned commit.
+ *       partitioned commit, filtered by the drop ids without a join.
  *
  * Store layout (single root, one write action per micro-batch — round 12
  * collapsed the previous three separate dynamic-partition writes, which
@@ -50,10 +54,10 @@ import graft.ops.Dedup.MinhashIndex
  * the double-run spec asserts byte-stable output.
  *
  * Scale shape: per batch the work is O(batch) signatures (map-side) +
- * band-key joins against a partition-pruned stored band table; nothing
- * ever recomputes the corpus. The stored index is the same artifact the
- * batch engine writes ([[writeIndexSlice]]) — batch bootstrap and
- * streaming ingest share one format.
+ * one band-key join against a partition-pruned stored band table;
+ * nothing ever recomputes the corpus. The stored index is the same
+ * artifact the batch engine writes ([[writeIndexSlice]]) — batch
+ * bootstrap and streaming ingest share one format.
  */
 object IngestPipeline {
 
@@ -112,7 +116,7 @@ object IngestPipeline {
     * overwrite — replay-idempotent), in ONE write. A zero-row `docs`
     * slice (an empty doc tier placeholder keeps the store's unified
     * schema) still commits readable files, so a later
-    * [[readIndexBefore]] never hits schema inference on an empty store.
+    * [[readIndexBefore]] always finds a footer with the unified schema.
     * The `base` stage (shingle sets + signatures, the expensive
     * map-side pass) is staged: `bands` derives from it, so without the
     * stage the two tiers would each recompute the signatures from the
@@ -150,12 +154,26 @@ object IngestPipeline {
   /** The stored index restricted to partitions `ingest_batch < beforeId`
     * — a partition-PRUNED read (both filters are on partition columns),
     * which is what makes a replayed batch blind to its own failed
-    * attempt's writes. A store with no committed slice yet reads as an
-    * empty index (LONG-id schema, the pipeline default). */
+    * attempt's writes. The schema comes from one part file's footer on
+    * the driver (every part file carries the unified schema), so the read
+    * starts no inference job.
+    *
+    * Only a genuinely empty store (no committed parquet outside
+    * dot-staging paths) — the intended first-batch case — reads as an
+    * empty index (LONG-id schema, the pipeline default). Anything else
+    * that is not a store (a typoed storeDir that happens to exist,
+    * corrupt or foreign files, missing `__idx_*` columns) RAISES: a
+    * decontamination pipeline that silently reads an empty index fails
+    * OPEN — it stops dropping near-dups and leaks protected content —
+    * which is strictly worse than failing the batch (round-13 advice
+    * item). */
   def readIndexBefore(spark: SparkSession, storeDir: String,
                       beforeId: Long): MinhashIndex =
-    try {
-      val pruned = spark.read.parquet(storeDir)
+    if (storeFileCount(storeDir) == 0) emptyIndex(spark)
+    else {
+      val pruned = spark.read
+        .schema(DeclaredParquet.inferredSchema(spark, storeDir))
+        .parquet(storeDir)
         .filter(col(BatchCol) < beforeId)
       MinhashIndex(
         pruned.filter(col(TierCol) === "bands")
@@ -165,17 +183,6 @@ object IngestPipeline {
         pruned.filter(col(TierCol) === "base")
           .select(col("__idx_id").as("id"), col("__idx_ih").as("ih"),
             col("__idx_sz").as("sz")))
-    } catch {
-      // Fall back to the empty index ONLY for a genuinely empty store
-      // (no committed parquet outside dot-staging paths) — the intended
-      // first-batch case. Any other analysis failure (typoed storeDir
-      // that happens to exist, corrupt or foreign files, missing
-      // __idx_* columns) RETHROWS: a decontamination pipeline that
-      // silently reads an empty index fails OPEN — it stops dropping
-      // near-dups and leaks protected content — which is strictly worse
-      // than failing the batch (round-13 advice item).
-      case e: org.apache.spark.sql.AnalysisException
-          if storeFileCount(storeDir) == 0 => emptyIndex(spark)
     }
 
   /**
@@ -187,47 +194,48 @@ object IngestPipeline {
    *  - internal: the HIGHER id of any batch-internal near-dup pair;
    *  - cross-corpus: any doc with a near-dup in the stored train index;
    *  - contamination: any doc with a near-dup in the protected index.
-   * Survivors AND their signatures land in ONE store commit — the
-   * index-UPDATE step that makes batch b+1 see batch b.
+   *
+   * A batch runs a fixed handful of jobs, whatever the store holds:
+   *  1. the batch's hashed shingle sets and MinHash signatures are staged
+   *     once; the `count` that materializes them also ends an empty batch;
+   *  2. one action collects the drop set — [[Dedup.lshDropIds]], one tagged
+   *     band join of the batch against itself, the stored index
+   *     (`ingest_batch < batchId`) and the protected index — on the
+   *     driver: at most one id per batch doc;
+   *  3. ONE store commit writes the survivors and their signatures (the
+   *     index-UPDATE step that makes batch b+1 see batch b), each tier
+   *     filtered by the drop ids, joining nothing: the doc tier from
+   *     `batch`, the `base` and `bands` tiers from the staged frame.
    */
   def processBatch(batch: DataFrame, batchId: Long,
                    storeDir: String, protectedIdx: MinhashIndex,
                    idCol: String = "doc_id", textCol: String = "text",
                    n: Int = 2, k: Int = 64, bands: Int = 16,
                    threshold: Double = 0.5): Unit = {
-    if (batch.isEmpty) return
     requireNoReserved(batch)
-    val spark = batch.sparkSession
-    val corpusIdx = readIndexBefore(spark, storeDir, beforeId = batchId)
-    // ONE batch index feeds all three pair tiers AND the survivor slice
-    // write: the signatures (the expensive map-side artifact) are staged
-    // once per micro-batch, never recomputed per consumer
-    val batchIdx = Dedup.buildMinhashIndex(batch, idCol, textCol, n, k, bands)
-    graft.ops.CacheScope.withStages(batchIdx.base, batchIdx.bands) {
-      val internal = Dedup.lshPairsWithin(batchIdx, threshold)
-      val cross = Dedup.lshPairsAgainst(batchIdx, corpusIdx, threshold)
-      val contam = Dedup.lshPairsAgainst(batchIdx, protectedIdx, threshold)
-      val drops = internal.select(col("id_b").as("__drop"))
-        .unionByName(cross.select(col("new_id").as("__drop")))
-        .unionByName(contam.select(col("new_id").as("__drop")))
-        .distinct()
-      // survivors feed three branches of the ONE write below (doc tier +
-      // the two signature-slice joins) — persist so the anti join runs
-      // once, not once per branch
-      val survivors = batch
-        .join(drops, col(idCol) === col("__drop"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val survIds = survivors.select(col(idCol).as("id"))
-        val survIdx = MinhashIndex(batchIdx.bands.join(survIds, "id"),
-          batchIdx.base.join(survIds, "id"))
-        val unified = survivors.withColumn(TierCol, lit("doc"))
-          .unionByName(bandsTier(survIdx), allowMissingColumns = true)
-          .unionByName(baseTier(survIdx), allowMissingColumns = true)
-          .withColumn(BatchCol, lit(batchId))
-        writeTiers(unified, storeDir)
-      } finally survivors.unpersist(blocking = false)
-    }
+    val staged = Dedup.hashedShingleSets(batch, idCol, textCol, n)
+      .withColumn("sig", Dedup.minhashSignature(col("ih"), k))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rows = staged.count()
+      if (rows == 0) return
+      val batchIdx = MinhashIndex(Dedup.signatureBands(staged, k, bands),
+        staged.select(col("id"), col("ih"), col("sz")))
+      val corpusIdx = readIndexBefore(batch.sparkSession, storeDir,
+        beforeId = batchId)
+      val drops = Dedup.lshDropIds(batchIdx, Seq(corpusIdx, protectedIdx),
+        threshold, rows).collect().map(_.get(0))
+      // null ids are never dropped (no drop rule can match them)
+      def survivors(df: DataFrame, id: String) =
+        if (drops.isEmpty) df
+        else df.filter(!coalesce(col(id).isin(drops: _*), lit(false)))
+      val survIdx = MinhashIndex(survivors(batchIdx.bands, "id"),
+        survivors(batchIdx.base, "id"))
+      writeTiers(survivors(batch, idCol).withColumn(TierCol, lit("doc"))
+        .unionByName(bandsTier(survIdx), allowMissingColumns = true)
+        .unionByName(baseTier(survIdx), allowMissingColumns = true)
+        .withColumn(BatchCol, lit(batchId)), storeDir)
+    } finally staged.unpersist(blocking = false)
   }
 
   // ----------------------------------------------------- index roll-up
@@ -282,11 +290,10 @@ object IngestPipeline {
    * INSTALLS the staged files under the fresh label FIRST and deletes
    * the sealed dirs LAST. Every intermediate state shows a reader
    * duplicates, never absences — and the pipeline's own consumers are
-   * duplicate-insensitive by construction (candidate pairs are
-   * `dropDuplicates` and drop sets `distinct` in
-   * [[graft.ops.Dedup.lshPairsWithin]]/`lshPairsAgainst`, and the
-   * verify join per pair yields identical verdict rows for duplicate
-   * base rows).
+   * duplicate-insensitive by construction (in
+   * [[graft.ops.Dedup.lshDropIds]] candidates are `dropDuplicates` and
+   * the drop set `distinct`, and the verify join per candidate yields
+   * identical verdict rows for duplicate base rows).
    *
    * Crash safety + SELF-HEALING: a crash before `_LABEL` leaves only
    * staging residue (deleted at next entry); a crash between install
@@ -409,10 +416,10 @@ object IngestPipeline {
     * remembers [[rollupIndexStore]]). The roll-up runs ON the
     * foreachBatch thread, after the batch's own store commit:
     * Structured Streaming serializes batches, and every index read
-    * fully materializes INSIDE [[processBatch]] (its one write action
-    * consumes them), so there is structurally no concurrent reader —
-    * and `sealedBefore = batchId` is always safe there, the current
-    * batch being the only uncommitted one. */
+    * fully materializes INSIDE [[processBatch]] (its drop-set action
+    * consumes them before the store write), so there is structurally no
+    * concurrent reader — and `sealedBefore = batchId` is always safe
+    * there, the current batch being the only uncommitted one. */
   def startIngest(docs: DataFrame, storeDir: String,
                   protectedIdx: MinhashIndex,
                   checkpoint: String,
