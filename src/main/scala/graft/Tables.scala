@@ -78,7 +78,9 @@ object Tables {
     val key = spark.sparkContext.applicationId + "|" + path + "|" +
       Artifacts.fingerprint(path)
     val meta = metaCache.computeIfAbsent(key, _ => {
+      // no data file: Spark's own inference raises its usual error
       val schema = graft.sources.DeclaredParquet.inferredSchema(spark, path)
+        .getOrElse(spark.read.parquet(path).schema)
       TableMeta(schema,
         spark.read.schema(schema).parquet(path).rdd.getNumPartitions <
           spark.sparkContext.defaultParallelism,

@@ -122,14 +122,22 @@ object Dedup {
       col("ih").as("ih_a"), col("sz").as("sz_a"))
     val b = withShingles.select(col("block"), col("id").as("id_b"),
       col("ih").as("ih_b"), col("sz").as("sz_b"))
-    a.join(b, Seq("block"))
-      .filter(col("id_a") < col("id_b"))
+    jaccardAtLeast(a.join(b, Seq("block")).filter(col("id_a") < col("id_b")),
+      threshold)
+      .select(col("block"), col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** The rows of `pairs` whose hashed shingle sets (`ih_a`, `sz_a`) and
+    * (`ih_b`, `sz_b`) have exact Jaccard |A∩B| / (|A|+|B|−|A∩B|) ≥
+    * `threshold`, with that value in column `jaccard` — one sorted
+    * intersection per pair, no union array materialized. Every verify step
+    * of this object applies this one rule. */
+  private def jaccardAtLeast(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
       .withColumn("inter", intersectSize(col("ih_a"), col("ih_b")).cast(DoubleType))
       .withColumn("jaccard",
         col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
-      .select(col("block"), col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /** |A∩B| of two SORTED-DISTINCT int arrays — the native two-pointer
     * merge count (graft.functions.SortedIntersectSize);
@@ -185,18 +193,13 @@ object Dedup {
         .as("ih"))
       .withColumn("sz", size(col("ih")))
 
-  /** Verify candidate pairs with exact Jaccard over the hashed shingle sets:
-    * |A∩B| / (|A|+|B|−|A∩B|) — one array_intersect per pair, no union array
-    * materialized. `base` is the output of [[hashedShingleSets]]. */
+  /** Verify candidate pairs with exact Jaccard over the hashed shingle sets
+    * ([[jaccardAtLeast]]). `base` is the output of [[hashedShingleSets]]. */
   def verifyJaccardPairs(pairs: DataFrame, base: DataFrame,
                          threshold: Double): DataFrame = {
     val aSide = base.select(col("id").as("id_a"), col("ih").as("ih_a"), col("sz").as("sz_a"))
     val bSide = base.select(col("id").as("id_b"), col("ih").as("ih_b"), col("sz").as("sz_b"))
-    pairs.join(aSide, "id_a").join(bSide, "id_b")
-      .withColumn("inter", intersectSize(col("ih_a"), col("ih_b")).cast(DoubleType))
-      .withColumn("jaccard",
-        col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
+    jaccardAtLeast(pairs.join(aSide, "id_a").join(bSide, "id_b"), threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
@@ -221,7 +224,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, k: Int = 64, bands: Int = 16,
                       threshold: Double = 0.5,
-                      maxBucket: Int = 1000): DataFrame = {
+                      maxBucket: Int = MaxBucket): DataFrame = {
     // The shingle sets and band rows each feed ≥2 downstream subplans (both
     // self-join sides + the bucket-count filter / verify fetches), so they
     // are cached for the duration of the computation — the "signature
@@ -238,13 +241,8 @@ object Dedup {
     * verify core of [[minhashLshPairs]] over caller-staged artifacts:
     * LAZY (no pin, no staging here). */
   def lshPairsWithin(idx: MinhashIndex, threshold: Double,
-                     maxBucket: Int = 1000): DataFrame = {
-    val sigs = idx.bands
-    val okBuckets = sigs.groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n").between(2, maxBucket))
-      .select(col("band_idx"), col("band_hash"))
-    val eligible = sigs.join(okBuckets, Seq("band_idx", "band_hash"))
+                     maxBucket: Int = MaxBucket): DataFrame = {
+    val eligible = cappedBands(idx.bands, maxBucket)
     val a = eligible.select(col("band_idx"), col("band_hash"), col("id").as("id_a"))
     val b = eligible.select(col("band_idx"), col("band_hash"), col("id").as("id_b"))
     val pairs = a.join(b, Seq("band_idx", "band_hash"))
@@ -253,6 +251,21 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
     verifyJaccardPairs(pairs, idx.base, threshold)
   }
+
+  /** The default bucket-size cap of the within-index LSH pair sets. */
+  private val MaxBucket = 1000
+
+  /** The rows of `bands` in a (band_idx, band_hash) bucket of 2 to
+    * `maxBucket` rows: singletons pair with nothing, and a bucket over the
+    * cap is degenerate boilerplate. The count is co-partitioned with the
+    * band join that follows (same key, no extra exchange). */
+  private def cappedBands(bands: DataFrame, maxBucket: Int): DataFrame =
+    bands.join(
+      bands.groupBy(col("band_idx"), col("band_hash"))
+        .agg(count(lit(1)).as("bucket_n"))
+        .filter(col("bucket_n").between(2, maxBucket))
+        .select(col("band_idx"), col("band_hash")),
+      Seq("band_idx", "band_hash"))
 
   // --------------------------------------------- incremental MinHash+LSH
 
@@ -321,27 +334,23 @@ object Dedup {
       col("ih").as("ih_a"), col("sz").as("sz_a"))
     val b = corpus.base.select(col("id").as("corpus_id"),
       col("ih").as("ih_b"), col("sz").as("sz_b"))
-    pairs.join(a, "new_id").join(b, "corpus_id")
-      .withColumn("inter",
-        intersectSize(col("ih_a"), col("ih_b")).cast(DoubleType))
-      .withColumn("jaccard",
-        col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
+    jaccardAtLeast(pairs.join(a, "new_id").join(b, "corpus_id"), threshold)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }
 
   /**
    * The ids of `batch` docs with a verified near-dup (Jaccard ≥ threshold)
-   * in the batch itself or in any of `refs` — the drop set of an ingest
-   * batch, found with ONE band join instead of one candidate + verify
-   * pipeline per reference. The reference band table is a tagged union:
+   * in the batch itself, in `corpus` or in `protectedIdx` — the drop set
+   * of an ingest batch, found with ONE band join instead of one candidate
+   * + verify pipeline per reference. The reference band table is a tagged
+   * union:
    *
    *  - tier 0, the batch's own bands, matched only where the reference id
    *    is LOWER than the new id (of an internal pair, the higher id drops —
    *    the pairs of [[lshPairsWithin]]);
-   *  - tier i ≥ 1, `refs(i - 1)`'s bands, matched where the ids differ (a
-   *    re-ingested id is not its own duplicate — the pairs of
-   *    [[lshPairsAgainst]]).
+   *  - tiers 1 and 2, the bands of `corpus` and `protectedIdx`, matched
+   *    where the ids differ (a re-ingested id is not its own duplicate —
+   *    the pairs of [[lshPairsAgainst]]).
    *
    * Candidates are distinct (new_id, tier, ref_id) triples, verified with
    * one join against the tagged union of the tiers' `base` tables keyed by
@@ -349,31 +358,26 @@ object Dedup {
    * against the text of the tier it collided in. Reference rows that
    * repeat (a roll-up's duplicate window) change no verdict.
    *
-   * Tier 0 keeps [[lshPairsWithin]]'s bucket cap: a bucket of more than
-   * `maxBucket` batch rows yields no internal pair. Each doc has one row
-   * per band index, so a bucket of a `batchRows`-row batch holds at most
-   * `batchRows` rows, and at `batchRows ≤ maxBucket` the cap cannot bind:
-   * its bucket-count aggregate is then left out of the plan. LAZY: no job
-   * runs and nothing is cached before the caller's action.
+   * Tier 0 keeps [[lshPairsWithin]]'s bucket cap. Each doc has one row per
+   * band index, so a bucket of a `batchRows`-row batch holds at most
+   * `batchRows` rows, and at `batchRows` ≤ the cap the cap cannot bind:
+   * its bucket-count aggregate, 2 jobs of a 50-doc batch, is then left out
+   * of the plan. LAZY: no job runs and nothing is cached before the
+   * caller's action.
    */
-  def lshDropIds(batch: MinhashIndex, refs: Seq[MinhashIndex],
-                 threshold: Double, batchRows: Long,
-                 maxBucket: Int = 1000): DataFrame = {
-    val own =
-      if (batchRows <= maxBucket) batch.bands
-      else batch.bands.join(
-        batch.bands.groupBy(col("band_idx"), col("band_hash"))
-          .agg(count(lit(1)).as("bucket_n"))
-          .filter(col("bucket_n") <= maxBucket)
-          .select(col("band_idx"), col("band_hash")),
-        Seq("band_idx", "band_hash"))
+  def lshDropIds(batch: MinhashIndex, corpus: MinhashIndex,
+                 protectedIdx: MinhashIndex, threshold: Double,
+                 batchRows: Long): DataFrame = {
     def tagged(tiers: Seq[DataFrame], cols: Column*) =
       tiers.zipWithIndex.map { case (df, t) =>
         df.select(lit(t).as("tier") +: col("id").as("ref_id") +: cols: _*)
       }.reduce(_ union _)
-    val refBands = tagged(own +: refs.map(_.bands),
+    val own =
+      if (batchRows <= MaxBucket) batch.bands
+      else cappedBands(batch.bands, MaxBucket)
+    val refBands = tagged(Seq(own, corpus.bands, protectedIdx.bands),
       col("band_idx"), col("band_hash"))
-    val refBase = tagged(batch.base +: refs.map(_.base),
+    val refBase = tagged(Seq(batch.base, corpus.base, protectedIdx.base),
       col("ih").as("ih_b"), col("sz").as("sz_b"))
     val candidates = batch.bands
       .select(col("id").as("new_id"), col("band_idx"), col("band_hash"))
@@ -384,11 +388,9 @@ object Dedup {
       .dropDuplicates("new_id", "tier", "ref_id")
     val newBase = batch.base.select(col("id").as("new_id"),
       col("ih").as("ih_a"), col("sz").as("sz_a"))
-    candidates.join(newBase, "new_id").join(refBase, Seq("tier", "ref_id"))
-      .withColumn("inter",
-        intersectSize(col("ih_a"), col("ih_b")).cast(DoubleType))
-      .filter(col("inter") / (col("sz_a") + col("sz_b") - col("inter"))
-        >= threshold)
+    jaccardAtLeast(
+      candidates.join(newBase, "new_id").join(refBase, Seq("tier", "ref_id")),
+      threshold)
       .select(col("new_id"))
       .distinct()
   }

@@ -35,7 +35,8 @@ object DeclaredParquet {
     * resolver; nullability not compared, file sources read all columns as
     * nullable). Extra file columns are allowed. */
   private def requireDeclared(spark: SparkSession, path: String, schema: StructType): Unit = {
-    val (file, footer) = firstFooter(spark, path)
+    val (file, footer) = firstFooter(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under $path"))
     val found = converter(spark).convert(footer.getSchema)
     val resolver = spark.sessionState.conf.resolver
     val mismatches = schema.fields.toSeq.flatMap { d =>
@@ -57,39 +58,46 @@ object DeclaredParquet {
     * Spark job: the Spark schema the file was written with, if it carries
     * one, else its parquet schema through the session's converter (which
     * honours settings such as `spark.sql.legacy.parquet.nanosAsLong`).
-    * The reader makes every column nullable either way. */
-  def inferredSchema(spark: SparkSession, path: String): StructType = {
-    val (_, footer) = firstFooter(spark, path)
-    Option(footer.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
-      .collect { case st: StructType => st }
-      .getOrElse(converter(spark).convert(footer.getSchema))
-  }
+    * The reader makes every column nullable either way. None when the
+    * read would scan no data file: `path` is missing, or holds only
+    * names the reader skips. */
+  def inferredSchema(spark: SparkSession, path: String): Option[StructType] =
+    firstFooter(spark, path).map { case (_, footer) =>
+      Option(footer.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case st: StructType => st }
+        .getOrElse(converter(spark).convert(footer.getSchema))
+    }
 
   private def converter(spark: SparkSession) =
     new ParquetToSparkSchemaConverter(spark.sessionState.conf)
 
-  /** The first data file under `path` and its footer's file metadata. */
-  private def firstFooter(spark: SparkSession, path: String): (Path, FileMetaData) = {
+  /** The first data file under `path` and its footer's file metadata;
+    * None if there is no data file. */
+  private def firstFooter(spark: SparkSession,
+                          path: String): Option[(Path, FileMetaData)] = {
     val conf = spark.sessionState.newHadoopConf()
-    val file = firstDataFile(new Path(path), conf).getOrElse(
-      throw new IllegalArgumentException(s"no parquet data file under $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try (file, reader.getFileMetaData) finally reader.close()
+    firstDataFile(new Path(path), conf).map { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      try (file, reader.getFileMetaData) finally reader.close()
+    }
   }
 
   /** The first file a parquet read of `root` would scan: Spark skips names
     * starting with `.`, and names starting with `_` unless they hold a `=`
     * (`_SUCCESS`, checksums and `_temporary` go; a partition dir such as
-    * `__tier=doc` stays). */
+    * `__tier=doc` stays). None for a missing root. */
   private def firstDataFile(root: Path,
                             conf: org.apache.hadoop.conf.Configuration): Option[Path] = {
     val fs = root.getFileSystem(conf)
-    val base = fs.makeQualified(root).toUri.getPath
-    val files = fs.listFiles(root, true)
-    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath).find { f =>
-      !f.toUri.getPath.stripPrefix(base).split('/')
-        .exists(s => (s.startsWith("_") && !s.contains("=")) || s.startsWith("."))
+    if (!fs.exists(root)) None
+    else {
+      val base = fs.makeQualified(root).toUri.getPath
+      val files = fs.listFiles(root, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath).find { f =>
+        !f.toUri.getPath.stripPrefix(base).split('/')
+          .exists(s => (s.startsWith("_") && !s.contains("=")) || s.startsWith("."))
+      }
     }
   }
 }

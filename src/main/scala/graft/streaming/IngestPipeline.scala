@@ -28,7 +28,8 @@ import graft.sources.DeclaredParquet
  *     → ONE multi-tier store write: survivors (tier `doc`) AND their
  *       signatures (tiers `bands`/`base` — the index-UPDATE step: batch
  *       b+1 dedups against batch b's survivors) land in a single
- *       partitioned commit, filtered by the drop ids without a join.
+ *       partitioned commit, filtered by a broadcast anti join against
+ *       the collected drop ids.
  *
  * Store layout (single root, one write action per micro-batch — round 12
  * collapsed the previous three separate dynamic-partition writes, which
@@ -158,31 +159,31 @@ object IngestPipeline {
     * the driver (every part file carries the unified schema), so the read
     * starts no inference job.
     *
-    * Only a genuinely empty store (no committed parquet outside
-    * dot-staging paths) — the intended first-batch case — reads as an
-    * empty index (LONG-id schema, the pipeline default). Anything else
-    * that is not a store (a typoed storeDir that happens to exist,
-    * corrupt or foreign files, missing `__idx_*` columns) RAISES: a
-    * decontamination pipeline that silently reads an empty index fails
-    * OPEN — it stops dropping near-dups and leaks protected content —
-    * which is strictly worse than failing the batch (round-13 advice
-    * item). */
+    * Only a genuinely empty store — the intended first-batch case: no
+    * data file a parquet read of `storeDir` would scan, found by the same
+    * Hadoop listing that reads the footer, so it holds for any file
+    * system — reads as an empty index (LONG-id schema, the pipeline
+    * default). Anything else that is not a store (a typoed storeDir
+    * that happens to exist, corrupt or foreign files, missing `__idx_*`
+    * columns) RAISES: a decontamination pipeline that silently reads an
+    * empty index fails OPEN — it stops dropping near-dups and leaks
+    * protected content — which is strictly worse than failing the batch
+    * (round-13 advice item). */
   def readIndexBefore(spark: SparkSession, storeDir: String,
                       beforeId: Long): MinhashIndex =
-    if (storeFileCount(storeDir) == 0) emptyIndex(spark)
-    else {
-      val pruned = spark.read
-        .schema(DeclaredParquet.inferredSchema(spark, storeDir))
-        .parquet(storeDir)
-        .filter(col(BatchCol) < beforeId)
-      MinhashIndex(
-        pruned.filter(col(TierCol) === "bands")
-          .select(col("__idx_id").as("id"),
-            col("__idx_band_idx").as("band_idx"),
-            col("__idx_band_hash").as("band_hash")),
-        pruned.filter(col(TierCol) === "base")
-          .select(col("__idx_id").as("id"), col("__idx_ih").as("ih"),
-            col("__idx_sz").as("sz")))
+    DeclaredParquet.inferredSchema(spark, storeDir) match {
+      case None => emptyIndex(spark)
+      case Some(schema) =>
+        val pruned = spark.read.schema(schema).parquet(storeDir)
+          .filter(col(BatchCol) < beforeId)
+        MinhashIndex(
+          pruned.filter(col(TierCol) === "bands")
+            .select(col("__idx_id").as("id"),
+              col("__idx_band_idx").as("band_idx"),
+              col("__idx_band_hash").as("band_hash")),
+          pruned.filter(col(TierCol) === "base")
+            .select(col("__idx_id").as("id"), col("__idx_ih").as("ih"),
+              col("__idx_sz").as("sz")))
     }
 
   /**
@@ -204,8 +205,10 @@ object IngestPipeline {
    *     driver: at most one id per batch doc;
    *  3. ONE store commit writes the survivors and their signatures (the
    *     index-UPDATE step that makes batch b+1 see batch b), each tier
-   *     filtered by the drop ids, joining nothing: the doc tier from
-   *     `batch`, the `base` and `bands` tiers from the staged frame.
+   *     filtered by a broadcast anti join against the drop ids, held as a
+   *     local relation: one small broadcast job, and no per-id literal in
+   *     the plan or its tasks, however large the batch. The doc tier comes
+   *     from `batch`, the `base` and `bands` tiers from the staged frame.
    */
   def processBatch(batch: DataFrame, batchId: Long,
                    storeDir: String, protectedIdx: MinhashIndex,
@@ -219,16 +222,17 @@ object IngestPipeline {
     try {
       val rows = staged.count()
       if (rows == 0) return
+      val spark = batch.sparkSession
       val batchIdx = MinhashIndex(Dedup.signatureBands(staged, k, bands),
         staged.select(col("id"), col("ih"), col("sz")))
-      val corpusIdx = readIndexBefore(batch.sparkSession, storeDir,
-        beforeId = batchId)
-      val drops = Dedup.lshDropIds(batchIdx, Seq(corpusIdx, protectedIdx),
-        threshold, rows).collect().map(_.get(0))
-      // null ids are never dropped (no drop rule can match them)
+      val corpusIdx = readIndexBefore(spark, storeDir, beforeId = batchId)
+      val dropIds = Dedup.lshDropIds(batchIdx, corpusIdx, protectedIdx,
+        threshold, rows)
+      val drops = broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(dropIds.collect(): _*), dropIds.schema))
+      // an anti join keeps null ids: no drop rule can match them
       def survivors(df: DataFrame, id: String) =
-        if (drops.isEmpty) df
-        else df.filter(!coalesce(col(id).isin(drops: _*), lit(false)))
+        df.join(drops, df(id) === drops("new_id"), "left_anti")
       val survIdx = MinhashIndex(survivors(batchIdx.bands, "id"),
         survivors(batchIdx.base, "id"))
       writeTiers(survivors(batch, idCol).withColumn(TierCol, lit("doc"))
@@ -240,10 +244,9 @@ object IngestPipeline {
 
   // ----------------------------------------------------- index roll-up
 
-  /** COMMITTED part-file count of a store directory (maintenance
-    * observability + the empty-store check of [[readIndexBefore]]):
-    * counts parquet files reachable without crossing a dot-prefixed
-    * path segment — exactly the files a Spark reader sees (staged
+  /** COMMITTED part-file count of a local store directory (maintenance
+    * observability): counts parquet files reachable without crossing a
+    * dot-prefixed path segment — exactly the files a Spark reader sees (staged
     * roll-up slices are invisible to both). */
   def storeFileCount(dir: String): Int = {
     val root = java.nio.file.Paths.get(dir)

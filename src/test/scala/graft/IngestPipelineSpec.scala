@@ -318,6 +318,21 @@ class IngestPipelineSpec extends SparkSpec {
       intercept[org.apache.spark.sql.AnalysisException] {
         IngestPipeline.readIndexBefore(spark, s"$tmp/foreign", 5L)
       }
+      // only staging residue (a dot-prefixed dir a reader skips) → empty
+      Seq((1L, "x")).toDF("a", "b").write
+        .parquet(s"$tmp/residue/.rollup_staging")
+      val residue = IngestPipeline.readIndexBefore(spark, s"$tmp/residue", 5L)
+      assert(residue.bands.count() === 0 && residue.base.count() === 0)
+      // a populated store named by a `file:` URI reads as the real index:
+      // emptiness is decided by the reader's own listing, not a local walk
+      IngestPipeline.writeIndexSlice(
+        Seq((1L, (1 to 20).map(i => s"w$i").mkString(" ")))
+          .toDF("doc_id", "text"),
+        s"$tmp/store", IngestPipeline.CorpusBatchId)
+      val uri = new java.io.File(s"$tmp/store").toURI.toString
+      assert(uri.startsWith("file:"))
+      val viaUri = IngestPipeline.readIndexBefore(spark, uri, 5L)
+      assert(viaUri.base.count() === 1 && viaUri.bands.count() === 16)
     }
   }
 
