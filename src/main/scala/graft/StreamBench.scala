@@ -6,7 +6,6 @@ import java.sql.DriverManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
 import graft.streaming.{EventStreams, IngestPipeline}
 
 /**
@@ -111,8 +110,8 @@ object StreamBench {
       IngestPipeline.writeIndexSlice(
         corpus.toSeq.toDF("doc_id", "text"), storeDir,
         IngestPipeline.CorpusBatchId)
-      val protectedIdx = Dedup.buildMinhashIndex(
-        corpus.toSeq.take(200).toDF("doc_id", "text"), "doc_id", "text")
+      val protectedIdx = IngestPipeline.protectedIndex(
+        corpus.toSeq.take(200).toDF("doc_id", "text"))
       val chunks = stream.grouped(
         math.max(1, stream.length / nBatches)).toSeq
       val input = MemoryStream[(Long, String)]

@@ -3,19 +3,23 @@ package graft.jobs
 import org.apache.spark.sql.DataFrame
 
 import graft.queries.HighlightQueries
-import graft.queries.HighlightQueries.{Params, TrendsTables}
+import graft.queries.HighlightQueries.{Params, Pass, TrendsTables}
 import graft.sink.KeyedPartitionSink
 
 /**
- * The reference's three-pass daily orchestration (R6, trends.go:133-199):
+ * The reference's daily orchestration (R6, trends.go:133-199) runs three
+ * highlight queries:
  *
  *   pass 1: curated highlights, retweets excluded   → type "status"
  *   pass 2: distinct sources,  retweets only        → type "retweetFromDistinctSources"
  *   pass 3: distinct sources,  retweets excluded    → type "statusFromDistinctSources"
  *
- * `-migrate-distinct-sources-only` skips passes 1–2 (EP2, trends.go:151-185).
- * Dead reference flags (`-username`, `-read-from-local-db`, `-aggregate` —
- * R7, trends.go:84-108) are deliberately not carried over.
+ * Here they are one plan: [[docs]] builds the active passes as
+ * tagged passes of [[HighlightQueries.highlights]], which reads each table
+ * once. `-migrate-distinct-sources-only` keeps pass 3 alone (EP2,
+ * trends.go:151-185). Dead reference flags (`-username`,
+ * `-read-from-local-db`, `-aggregate` — R7, trends.go:84-108) are
+ * deliberately not carried over.
  */
 object TrendsJob {
 
@@ -34,25 +38,26 @@ object TrendsJob {
   def activePasses(distinctSourcesOnly: Boolean): Seq[(String, Boolean, Boolean)] =
     if (distinctSourcesOnly) passes.filter(_._2) .filter(!_._3) else passes
 
-  /** Build one pass: the pass's highlight query, assembled into docs ready
-    * for the sink. Runs no job and no count; the reference's progress count
-    * (A5) is [[HighlightQueries.countHighlights]], which no pass calls. */
+  /** One pass's docs, ready for the sink: the single-pass view of [[docs]]'
+    * plan. Runs no job and no count; the reference's progress count (A5)
+    * is [[HighlightQueries.countHighlights]], which no pass calls. */
   def runPass(t: TrendsTables, cfg: Config,
               statusType: String, distinctSources: Boolean,
-              includeRetweets: Boolean): DataFrame = {
-    val p = cfg.params.copy(includeRetweets = includeRetweets)
-    val result =
-      if (distinctSources) HighlightQueries.distinctSourcesHighlights(t, p)
-      else HighlightQueries.curatedHighlights(t, p)
-    KeyedPartitionSink.assembleDocs(result, p.listId, p.sinceDate, statusType)
-  }
+              includeRetweets: Boolean): DataFrame =
+    docsOf(t, cfg, Seq((statusType, distinctSources, includeRetweets)))
 
-  /** All active passes' docs unioned with their type discriminator
-    * (SURVEY §2.7). */
+  /** All active passes' docs, each with its type discriminator (SURVEY
+    * §2.7), from one plan. */
   def docs(t: TrendsTables, cfg: Config): DataFrame =
-    activePasses(cfg.distinctSourcesOnly)
-      .map { case (st, ds, rt) => runPass(t, cfg, st, ds, rt) }
-      .reduce(_ union _)
+    docsOf(t, cfg, activePasses(cfg.distinctSourcesOnly))
+
+  private def docsOf(t: TrendsTables, cfg: Config,
+                     ps: Seq[(String, Boolean, Boolean)]): DataFrame = {
+    val p = cfg.params
+    KeyedPartitionSink.assembleDocs(
+      HighlightQueries.highlights(t, p, ps.map(Pass.tupled)),
+      p.listId, p.sinceDate)
+  }
 
   /** Full daily run (EP1): [[docs]] written through the idempotent
     * partitioned sink in one shot, with at most `maxWriteTasks` write tasks
@@ -63,7 +68,8 @@ object TrendsJob {
 
   /**
    * The north star's full JDBC lifecycle: five tables read over JDBC
-   * (≙ the reference's Postgres source, trends.go:215-223), three passes,
+   * (≙ the reference's Postgres source, trends.go:215-223), each read once
+   * by the one plan of the three passes,
    * and the delete-then-insert upsert back over JDBC (≙ the Firebase node
    * pre-delete + keyed writes, trends.go:656-745). The replay scope is the
    * (list, date) node — exactly what the reference deletes before a rerun.

@@ -1,11 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.expr.CoreExprs._
-import graft.ops.Joins
 
 /**
  * The reference engine's three analytical queries (trends.go:256-529),
@@ -13,6 +13,9 @@ import graft.ops.Joins
  * reference assembles SQL strings from a 2×2 flag matrix
  * (distinctSources × includeRetweets, trends.go:274-406); here the same
  * branching happens in Scala and the "IR" is the Catalyst logical plan.
+ * The daily job's passes are cells of that matrix, and [[highlights]]
+ * builds any set of them as one plan: the curated and distinct-sources
+ * queries are its single-pass views.
  *
  * Output is the 11-column contract of trends.go:279-292
  * (graft.model.Schemas.resultRow).
@@ -62,16 +65,43 @@ object HighlightQueries {
     if (p.sinceLastWeek) withinLastWeek(col("ust_created_at"), nowCol(p))
     else dayCond
 
-  /** Deleted-member key list: comma-join weaving_user × publishers_list on
-    * username = screen_name, soft-deleted lists only (J7/F9,
-    * trends.go:315-319). Both dims are small → broadcast inner join. */
-  private def deletedMembers(t: TrendsTables): DataFrame =
-    t.weavingUser.join(
-      broadcast(t.publishersList
-        .filter(col("deleted_at").isNotNull)
-        .filter(col("screen_name").isNotNull)
-        .select(col("screen_name"))),
-      col("usr_twitter_username") === col("screen_name"))
+  /** The list dimension and the deleted-member keys as ONE row, read with
+    * one scan of `publishers_list` and one of `weaving_user`:
+    *  - `list_ids` / `list_names`: ids and non-NULL screen names of the
+    *    rows on either list (F10);
+    *  - `del_*`: the deleted-member key list (J7/F9, trends.go:315-319),
+    *    weaving_user × publishers_list on username = screen_name over
+    *    soft-deleted rows: its size, its `usr_id` and author-id keys, and
+    *    whether it holds a NULL key, which is what SQL's NOT IN needs.
+    * The user dimension is the broadcast side, so every list row survives
+    * the join; the one-partition aggregate needs no exchange. */
+  private def dims(t: TrendsTables, p: Params): DataFrame = {
+    val members = t.publishersList.join(broadcast(t.weavingUser),
+      col("deleted_at").isNotNull && col("screen_name").isNotNull &&
+        col("usr_twitter_username") === col("screen_name"), "left")
+    val deleted = col("usr_twitter_username").isNotNull
+    val tid = col("usr_twitter_id").cast(LongType)
+    members.coalesce(1).agg(
+      collect_set(when(listMatch(p), col("id"))).as("list_ids"),
+      collect_set(when(listMatch(p), col("screen_name"))).as("list_names"),
+      count(when(deleted, lit(1))).as("del_n"),
+      collect_set(when(deleted, col("usr_id"))).as("del_usr_ids"),
+      max(deleted && col("usr_id").isNull).as("del_usr_null"),
+      collect_set(when(deleted, tid)).as("del_tids"),
+      max(deleted && tid.isNull).as("del_tid_null"))
+  }
+
+  /** `key NOT IN (deleted-member keys)` with SQL's three-valued logic
+    * (F7/F8, the semantics of Joins.notInFaithful) over the [[dims]] row:
+    * an empty key list keeps every row; otherwise a NULL key, or a NULL in
+    * the list, keeps none. */
+  private def notDeleted(p: Params, key: Column, keys: String,
+                         hasNull: String): Column =
+    if (!p.excludeDeletedMembers) lit(true)
+    else col("del_n") === 0 ||
+      (key.isNotNull && !col(hasNull) && !array_contains(col(keys), key))
+
+  private def isTrue(c: Column): Column = coalesce(c, lit(false))
 
   /** Same-day popularity samples aligned to the highlight's publication day
     * (J5, trends.go:396-399).
@@ -106,164 +136,176 @@ object HighlightQueries {
   private def publicationDay(p: Params, distinctSources: Boolean): Option[String] =
     if (distinctSources && p.sinceLastWeek) None else Some(p.sinceDate)
 
+  /** One pass of the daily job (trends.go:133-199): its sink discriminator
+    * and its cell of the flag matrix. */
+  final case class Pass(statusType: String, distinctSources: Boolean,
+                        includeRetweets: Boolean)
+
   /**
-   * Curated-highlights query (trends.go:279-334, 394-406): INNER join tree
-   * rooted at `highlight`, per-status dedup via GROUP BY over all output
-   * expressions, MAX over the popularity coalesce chains, global sort +
-   * pagination.
+   * Every pass of `passes` from ONE plan that reads each table once; each
+   * row carries its pass's `status_type`, and each pass is sorted and
+   * paginated on its own.
+   *
+   *  - Candidates: `weaving_status` LEFT JOIN `highlight`, each side
+   *    filtered by the union of the passes' day (or week) predicates, with
+   *    the popularity samples (J5) and the one-row [[dims]] joined on.
+   *  - Each pass's rules are row tags over the candidates. Curated
+   *    (trends.go:279-334): the rows its INNER join admits, on a list by
+   *    `aggregate_id` (J2), `member_id` not a deleted member (F7).
+   *    Distinct sources (trends.go:336-392): each status of the day with
+   *    the highlight rows its LEFT join admits (J3 puts `is_retweet =
+   *    false` inside the ON clause), or NULL-extended when it admits none;
+   *    of its retweet kind (F6), on a list by `aggregate_id` or screen
+   *    name (J4), its author not a deleted member (F8).
+   *  - One aggregate over (`status_type`, publisher, curated payload):
+   *    the curated rows deduplicated by grouping on every output
+   *    expression (A1) with MAX over the popularity chains (A2), and per
+   *    distinct-sources pass one row per publisher, the payload of its
+   *    most retweeted status, ties broken by status id DESC (A3; pinned,
+   *    unlike the reference's unspecified ARRAY_AGG tiebreak — SURVEY
+   *    §7.4 #2).
+   *
+   * One shuffle on the publisher serves both the per-status window that
+   * finds the statuses to NULL-extend and the aggregate. When every pass
+   * pins the publication day (all but distinct sources in week mode), the
+   * highlight rows and popularity samples are one day's and are broadcast.
    */
-  def curatedHighlights(t: TrendsTables, p: Params): DataFrame = {
-    val s = t.weavingStatus
-    var h = t.highlight
-      .filter(dayBucketEquals(col("publication_date_time"), p.sinceDate))
-    if (!p.includeRetweets)
-      h = h.filter(col("is_retweet") === false) // F5, trends.go:274-277
+  def highlights(t: TrendsTables, p: Params, passes: Seq[Pass]): DataFrame = {
+    require(passes.nonEmpty, "highlights needs at least one pass")
+    val doc = col("ust_api_document")
+    val createdOnDay = dayBucketEquals(col("ust_created_at"), p.sinceDate)
+    val publishedOnDay =
+      dayBucketEquals(col("publication_date_time"), p.sinceDate)
+    def kept(ps: Pass) = // F5
+      if (ps.includeRetweets) lit(true) else col("is_retweet") === false
+    // the statuses a pass reads: F3/F4 for curated, F2 for distinct
+    def statuses(ps: Pass) =
+      if (ps.distinctSources) createdOnDay else sinceWhen(p, createdOnDay)
+    // the highlight rows a pass's join can admit, on highlight columns only
+    def highlightRows(ps: Pass) =
+      (if (ps.distinctSources && p.sinceLastWeek) lit(true) else publishedOnDay) &&
+        kept(ps)
+    // a candidate row the pass's own join condition admits
+    def admits(ps: Pass) = isTrue(col("status_id").isNotNull && kept(ps) &&
+      (if (ps.distinctSources) sinceWhen(p, publishedOnDay) else publishedOnDay))
 
-    var joined = h
-      .join(s,
-        col("ust_id") === col("status_id") && // F3 alignment / F4 week window
-          sinceWhen(p, dayBucketEquals(col("ust_created_at"), p.sinceDate)))
-      .join(broadcast(t.publishersList.filter(listMatch(p))), // J2 small dim
-        col("aggregate_id") === col("id"))
+    val pinDay =
+      if (passes.forall(ps => publicationDay(p, ps.distinctSources).isDefined))
+        Some(p.sinceDate) else None
+    def dayScoped(df: DataFrame) = if (pinDay.isDefined) broadcast(df) else df
+    val h = t.highlight.filter(passes.map(highlightRows).reduce(_ || _))
+    val candidates = t.weavingStatus.filter(passes.map(statuses).reduce(_ || _))
+      .join(dayScoped(h), col("ust_id") === col("status_id"), "left")
+      .join(dayScoped(popularityJoined(t, pinDay)),
+        col("p_status_id") === col("status_id") &&
+          col("p_day") === dayBucket(col("publication_date_time")),
+        "left")
+      .crossJoin(broadcast(dims(t, p)))
+      .repartition(col("ust_full_name"))
 
-    if (p.excludeDeletedMembers) // F7 NOT-IN semantics
-      joined = Joins.notInFaithful(joined,
-        deletedMembers(t).select(col("usr_id")),
-        col("member_id"), col("usr_id"))
+    // whether a distinct-sources pass's ON clause admits any highlight row
+    // of the status: if not, J3 NULL-extends the status instead
+    val status = Window.partitionBy(t.weavingStatus.columns.map(col): _*)
+    def admittedAny(i: Int) = s"__admitted_$i"
+    val withAdmitted = passes.zipWithIndex.foldLeft(candidates) {
+      case (df, (ps, i)) if ps.distinctSources =>
+        df.withColumn(admittedAny(i), max(admits(ps)).over(status))
+      case (df, _) => df
+    }
 
-    val pop = popularityJoined(t, publicationDay(p, distinctSources = false))
-    val withPop = joined.join(pop, // J5 temporal alignment
-      col("p_status_id") === col("status_id") &&
-        col("p_day") === dayBucket(col("publication_date_time")),
-      "left")
+    val byId = isTrue(array_contains(col("list_ids"), col("aggregate_id")))
+    val byName = isTrue(array_contains(col("list_names"), col("ust_full_name")))
+    val memberKept =
+      notDeleted(p, col("member_id"), "del_usr_ids", "del_usr_null")
+    val authorKept =
+      notDeleted(p, authorTwitterId(doc), "del_tids", "del_tid_null")
+    def tag(ps: Pass, nullExtended: Boolean) = struct(
+      lit(ps.statusType).as("status_type"),
+      lit(ps.distinctSources).as("distinct"),
+      lit(nullExtended).as("null_extended"))
+    val tags = passes.zipWithIndex.flatMap {
+      case (ps, _) if !ps.distinctSources =>
+        Seq(when(statuses(ps) && admits(ps) && byId && memberKept, tag(ps, false)))
+      case (ps, i) =>
+        def kind(isRetweet: Column) =
+          isOfRetweetKind(isRetweet, doc) === ps.includeRetweets
+        Seq(
+          when(statuses(ps) && admits(ps) && kind(col("is_retweet")) &&
+            (byId || byName) && authorKept, tag(ps, false)),
+          when(statuses(ps) && !col(admittedAny(i)) && kind(lit(null)) &&
+            byName && authorKept, tag(ps, true)))
+    }
+    val tagged = withAdmitted.select(col("*"),
+      explode(filter(array(tags: _*), _.isNotNull)).as("tag"))
 
-    // A1 group-by-all-output dedup + A2 MAX(COALESCE(...)); the favorites
-    // chain uses the SANE semantics, not trends.go:344's mixed-chain bug.
-    val grouped = withPop
-      .groupBy(
-        col("ust_status_id"), col("ust_full_name"), col("ust_text"),
-        col("ust_created_at"), col("ust_api_document"), col("ust_id"),
-        col("is_retweet"), col("publication_date_time"))
+    // a NULL-extended row has no highlight, hence no popularity sample
+    def joined(c: String) = when(!col("tag.null_extended"), col(c))
+    val distinct = col("tag.distinct")
+    def payload(k: Column, isRetweet: Column, published: Column) = struct(
+      k.as("k"),
+      col("ust_status_id").as("statusId"),
+      col("ust_text").as("tweet"),
+      // publicationDate AND checkedAt are both the status's creation time
+      // in the reference (trends.go:291, 340, 348)
+      col("ust_created_at").as("publicationDate"),
+      doc.as("json"),
+      col("ust_id").as("id"),
+      isRetweet.as("is_retweet"),
+      published.as("publication_date_time"))
+    val retweets =
+      retweetsChain(joined("p_total_retweets"), joined("total_retweets"), doc)
+    // curated rows group by their whole payload (A1), distinct-sources
+    // rows by publisher alone
+    val grouped = tagged
+      .groupBy(col("tag.status_type").as("status_type"), col("ust_full_name"),
+        when(!distinct, payload(lit(null).cast(IntegerType), col("is_retweet"),
+          col("publication_date_time"))).as("curated"))
       .agg(
-        max(coalesce(col("p_total_retweets"), col("total_retweets")))
+        // the distinct-sources argmax ranks by COALESCE(popularity, frozen,
+        // doc.retweet_count) and carries the COALESCED kind flag
+        // (trends.go:347); the favorites chain is the SANE one, not
+        // trends.go:344's mixed chain
+        max(when(distinct, payload(retweets,
+          isOfRetweetKind(joined("is_retweet"), doc),
+          lit(null).cast(TimestampType)))).as("top"),
+        max(when(distinct, retweets)
+          .otherwise(coalesce(col("p_total_retweets"), col("total_retweets"))))
           .as("retweets"),
-        max(coalesce(col("p_total_favorites"), col("total_favorites")))
+        max(when(distinct, favoritesChain(joined("p_total_favorites"),
+            joined("total_favorites"), doc))
+          .otherwise(coalesce(col("p_total_favorites"), col("total_favorites"))))
           .as("favorites"))
 
-    val projected = grouped.select(
-      statusUrl(col("ust_full_name"), col("ust_status_id")).as("url"),
+    val row = coalesce(col("curated"), col("top"))
+    paginate(grouped.select(
+      statusUrl(col("ust_full_name"), row("statusId")).as("url"),
       col("ust_full_name").as("username"),
-      col("ust_text").as("tweet"),
-      col("ust_created_at").as("publicationDate"),
-      col("ust_api_document").as("json"),
+      row("tweet").as("tweet"),
+      row("publicationDate").as("publicationDate"),
+      row("json").as("json"),
       col("retweets"),
       col("favorites"),
-      col("ust_id").as("id"),
-      col("ust_status_id").as("statusId"),
-      col("is_retweet"),
-      // the reference emits the status CREATION time as checkedAt
-      // (`s.ust_created_at as checkedAt`, trends.go:291) — it is NOT a
-      // popularity-sample timestamp
-      col("ust_created_at").as("checkedAt"))
-
-    paginate(sort(projected, p), p)
+      row("id").as("id"),
+      row("statusId").as("statusId"),
+      row("is_retweet").as("is_retweet"),
+      row("publicationDate").as("checkedAt"),
+      col("status_type")), p)
   }
 
-  /**
-   * Distinct-sources query (trends.go:336-392): base flipped to
-   * `weaving_status` LEFT JOIN `highlight` (J3), disjunctive list join (J4),
-   * author-id anti join (F8), then ONE row per publisher via a single
-   * struct-max argmax (A3) — all payload columns come from the publisher's
-   * most-retweeted status, ties broken by status id DESC (pinned, unlike the
-   * reference's unspecified ARRAY_AGG tiebreak — SURVEY §7.4 #2).
-   */
-  def distinctSourcesHighlights(t: TrendsTables, p: Params): DataFrame = {
-    val s = t.weavingStatus
-      .filter(dayBucketEquals(col("ust_created_at"), p.sinceDate)) // F2
+  /** The curated-highlights query (trends.go:279-334, 394-406): the
+    * single-pass view of [[highlights]], globally sorted. */
+  def curatedHighlights(t: TrendsTables, p: Params): DataFrame =
+    onePass(t, p, distinctSources = false)
 
-    val h = t.highlight.select(
-      col("status_id"), col("aggregate_id"), col("member_id"),
-      col("is_retweet"), col("publication_date_time"),
-      col("total_retweets"), col("total_favorites"))
+  /** The distinct-sources query (trends.go:336-392): the single-pass view
+    * of [[highlights]], globally sorted. */
+  def distinctSourcesHighlights(t: TrendsTables, p: Params): DataFrame =
+    onePass(t, p, distinctSources = true)
 
-    // J3 — LEFT join; when retweets are excluded the reference puts
-    // `h.is_retweet = false` INSIDE the ON clause (trends.go:356), so a
-    // status whose highlight row is retweet-flagged keeps NULL h columns
-    // (its kind then falls back to the doc heuristic) instead of dropping.
-    val hCond = col("ust_id") === col("status_id") &&
-      sinceWhen(p, dayBucketEquals(col("publication_date_time"), p.sinceDate)) &&
-      (if (!p.includeRetweets) col("is_retweet") === false else lit(true))
-    val base = s.join(h, hCond, "left")
-
-    // F6 — retweet-kind filter on the coalesced flag
-    val kindFiltered = base.filter(
-      isOfRetweetKind(col("is_retweet"), col("ust_api_document"))
-        === lit(p.includeRetweets))
-
-    // J4 — disjunctive join against the tiny list dim. `publishers_list` is
-    // broadcast, so the OR-predicate join is a broadcast nested loop over a
-    // dimension of a few hundred rows — the union-of-equi-joins rewrite
-    // (CoreQueries.q05) is the path for a large dim.
-    val pl = t.publishersList.filter(listMatch(p))
-      .select(col("id").as("pl_id"), col("screen_name"))
-    val listJoined = kindFiltered.join(broadcast(pl),
-      col("aggregate_id") === col("pl_id") ||
-        (col("ust_full_name") === col("screen_name") && col("screen_name").isNotNull))
-
-    // F8 — deleted-member exclusion by author twitter id dug out of the doc
-    val excluded =
-      if (p.excludeDeletedMembers)
-        Joins.notInFaithful(listJoined,
-          deletedMembers(t).select(col("usr_twitter_id").cast(LongType).as("del_tid")),
-          authorTwitterId(col("ust_api_document")), col("del_tid"))
-      else listJoined
-
-    val pop = popularityJoined(t, publicationDay(p, distinctSources = true))
-    val withPop = excluded.join(pop,
-      col("p_status_id") === col("status_id") &&
-        col("p_day") === dayBucket(col("publication_date_time")),
-      "left")
-
-    // A3 — the ranking key: COALESCE(popularity, frozen, doc.retweet_count)
-    val k = retweetsChain(col("p_total_retweets"), col("total_retweets"),
-      col("ust_api_document"))
-
-    val grouped = withPop
-      .groupBy(col("ust_full_name"))
-      .agg(
-        max(struct(
-          k.as("k"),
-          col("ust_status_id").as("tiebreak"),
-          col("ust_text").as("tweet"),
-          // publicationDate AND checkedAt are both the winner's creation
-          // time in the reference (trends.go:340, 348)
-          col("ust_created_at").as("publicationDate"),
-          col("ust_api_document").as("json"),
-          col("ust_id").as("id"),
-          // the reference argmaxes the COALESCED kind flag (trends.go:347),
-          // not the raw highlight column
-          isOfRetweetKind(col("is_retweet"), col("ust_api_document"))
-            .as("is_retweet"))).as("best"),
-        max(retweetsChain(col("p_total_retweets"), col("total_retweets"),
-          col("ust_api_document"))).as("retweets"),
-        max(favoritesChain(col("p_total_favorites"), col("total_favorites"),
-          col("ust_api_document"))).as("favorites"))
-
-    val projected = grouped.select(
-      statusUrl(col("ust_full_name"), col("best.tiebreak")).as("url"),
-      col("ust_full_name").as("username"),
-      col("best.tweet").as("tweet"),
-      col("best.publicationDate").as("publicationDate"),
-      col("best.json").as("json"),
-      col("retweets"),
-      col("favorites"),
-      col("best.id").as("id"),
-      col("best.tiebreak").as("statusId"),
-      col("best.is_retweet").as("is_retweet"),
-      col("best.publicationDate").as("checkedAt"))
-
-    paginate(sort(projected, p), p)
-  }
+  private def onePass(t: TrendsTables, p: Params,
+                      distinctSources: Boolean): DataFrame =
+    sort(highlights(t, p, Seq(Pass("", distinctSources, p.includeRetweets)))
+      .drop("status_type"), p)
 
   /**
    * The COUNT query (A4, trends.go:450-529), faithful to three reference
@@ -311,19 +353,26 @@ object HighlightQueries {
     }
   }
 
-  private def sort(df: DataFrame, p: Params): DataFrame = {
-    // O1 — caller-chosen direction, always DESC at the reference call sites
-    // (trends.go:160, 182, 196); statusId tiebreak pinned for determinism.
-    val key = if (p.sortDesc) col("retweets").desc else col("retweets").asc
-    df.orderBy(key, col("statusId"))
-  }
+  /** O1 — caller-chosen direction, always DESC at the reference call sites
+    * (trends.go:160, 182, 196); statusId tiebreak pinned for determinism. */
+  private def order(p: Params): Seq[Column] =
+    Seq(if (p.sortDesc) col("retweets").desc else col("retweets").asc,
+      col("statusId"))
 
-  private def paginate(df: DataFrame, p: Params): DataFrame = {
-    // O2 — sane pagination (offset = page * limit), NOT the reference's
-    // `page * tweetPerPage(=100000)` constant (trends.go:40, 424) —
-    // documented deviation (SURVEY §7.4 #5).
-    val offset = p.page * math.max(p.limit, 0)
-    val limited = if (offset > 0) df.offset(offset) else df
-    if (p.limit >= 0) limited.limit(p.limit) else limited
-  }
+  private def sort(df: DataFrame, p: Params): DataFrame = df.orderBy(order(p): _*)
+
+  /** O2 — sane pagination (offset = page * limit), NOT the reference's
+    * `page * tweetPerPage(=100000)` constant (trends.go:40, 424) —
+    * documented deviation (SURVEY §7.4 #5) — applied to each pass on its
+    * own: a rank per `status_type` in the pass's [[order]]. */
+  private def paginate(df: DataFrame, p: Params): DataFrame =
+    if (p.limit < 0) df
+    else {
+      val offset = p.page * p.limit
+      val rank = row_number().over(
+        Window.partitionBy(col("status_type")).orderBy(order(p): _*))
+      df.withColumn("__rank", rank)
+        .filter(col("__rank") > offset && col("__rank") <= offset + p.limit)
+        .drop("__rank")
+    }
 }

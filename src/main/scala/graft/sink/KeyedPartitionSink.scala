@@ -30,40 +30,32 @@ object KeyedPartitionSink {
   def write(docs: DataFrame, path: String,
             dryRun: Boolean = false,
             maxWriteTasks: Int = 100): Unit = {
-    val spark = docs.sparkSession
     if (dryRun) {
       docs.explain("formatted")
       return
     }
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // coalesce never increases partition count, so this is a pure upper
-      // bound on write tasks (≙ the reference's 100-goroutine cap, R3) and
-      // doesn't force RDD lineage materialization the way probing
-      // rdd.getNumPartitions would pre-AQE
-      val bounded = docs.coalesce(maxWriteTasks)
-      bounded.write
-        .mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*)
-        .parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    // coalesce never increases partition count, so this is a pure upper
+    // bound on write tasks (≙ the reference's 100-goroutine cap, R3) and
+    // doesn't force RDD lineage materialization the way probing
+    // rdd.getNumPartitions would pre-AQE. The overwrite mode is a writer
+    // option, so the session's setting is never touched.
+    docs.coalesce(maxWriteTasks).write
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
   }
 
   /**
    * Assemble the 12-field sink document (trends.go:716-729) from the
-   * 11-column result contract + partition keys. `twitter_id` is the id_str
+   * 11-column result contract + partition keys; `result` carries each
+   * row's pass in `status_type`. `twitter_id` is the id_str
    * decoded from the JSON doc (the reference keys the upsert on it —
    * trends.go:699); malformed docs yield NULL there and are skipped with a
    * counter, mirroring the reference's skip-not-fatal gate (trends.go:690-694).
    */
-  def assembleDocs(result: DataFrame, listId: String, ingestDate: String,
-                   statusType: String): DataFrame =
+  def assembleDocs(result: DataFrame, listId: String,
+                   ingestDate: String): DataFrame =
     result
       .withColumn("decoded_id",
         get_json_object(col("json"), "$.id_str"))
@@ -83,5 +75,5 @@ object KeyedPartitionSink {
         col("favorites").as("totalFavorites"),
         lit(listId).as("list_id"),
         lit(ingestDate).as("ingest_date"),
-        lit(statusType).as("status_type"))
+        col("status_type"))
 }

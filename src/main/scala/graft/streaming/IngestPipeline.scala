@@ -66,6 +66,12 @@ object IngestPipeline {
     * dedups against it. */
   val CorpusBatchId: Long = -1L
 
+  /** The pipeline's LSH settings: word-shingle size, MinHash signature
+    * length and band count. */
+  val ShingleN = 2
+  val SignatureK = 64
+  val Bands = 16
+
   /** Store-internal column names; never valid in a user doc schema. */
   private val TierCol = "__tier"
   private val BatchCol = "ingest_batch"
@@ -100,6 +106,14 @@ object IngestPipeline {
     }
   }
 
+  /** The frozen protected index of `docs`, built with the shingle size,
+    * signature length and banding [[processBatch]] uses: an index built
+    * with other settings hashes other shingles, so the decontamination
+    * tier could never match it. */
+  def protectedIndex(docs: DataFrame, idCol: String = "doc_id",
+                     textCol: String = "text"): MinhashIndex =
+    Dedup.buildMinhashIndex(docs, idCol, textCol, ShingleN, SignatureK, Bands)
+
   /** The index tiers of a batch index, in store envelope names. */
   private def bandsTier(idx: MinhashIndex): DataFrame =
     idx.bands.select(col("id").as("__idx_id"),
@@ -124,7 +138,7 @@ object IngestPipeline {
     * raw text. */
   def writeIndexSlice(docs: DataFrame, storeDir: String, batchId: Long,
                       idCol: String = "doc_id", textCol: String = "text",
-                      n: Int = 2, k: Int = 64, bands: Int = 16): Unit = {
+                      n: Int = ShingleN, k: Int = SignatureK, bands: Int = Bands): Unit = {
     requireNoReserved(docs)
     val idx = Dedup.buildMinhashIndex(docs, idCol, textCol, n, k, bands)
     graft.ops.CacheScope.withStages(idx.base) {
@@ -213,7 +227,7 @@ object IngestPipeline {
   def processBatch(batch: DataFrame, batchId: Long,
                    storeDir: String, protectedIdx: MinhashIndex,
                    idCol: String = "doc_id", textCol: String = "text",
-                   n: Int = 2, k: Int = 64, bands: Int = 16,
+                   n: Int = ShingleN, k: Int = SignatureK, bands: Int = Bands,
                    threshold: Double = 0.5): Unit = {
     requireNoReserved(batch)
     val staged = Dedup.hashedShingleSets(batch, idCol, textCol, n)
@@ -427,7 +441,7 @@ object IngestPipeline {
                   protectedIdx: MinhashIndex,
                   checkpoint: String,
                   idCol: String = "doc_id", textCol: String = "text",
-                  n: Int = 2, k: Int = 64, bands: Int = 16,
+                  n: Int = ShingleN, k: Int = SignatureK, bands: Int = Bands,
                   threshold: Double = 0.5,
                   rollupEvery: Option[Int] = None): StreamingQuery = {
     rollupEvery.foreach(r => require(r >= 1, s"rollupEvery must be >= 1: $r"))

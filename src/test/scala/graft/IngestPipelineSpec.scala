@@ -362,4 +362,21 @@ class IngestPipelineSpec extends SparkSpec {
       assert(out === Seq((0L, 10L), (0L, 11L)))
     }
   }
+
+  test("protectedIndex shingles like the pipeline: a copy of a protected doc that is not in the corpus is dropped") {
+    withTempDirs("graft-ingest-p") { case Seq(tmp) =>
+      val storeDir = s"$tmp/store"
+      IngestPipeline.writeIndexSlice(
+        Seq((100L, text("ca"))).toDF("doc_id", "text"),
+        storeDir, IngestPipeline.CorpusBatchId)
+      val protIdx = IngestPipeline.protectedIndex(
+        Seq((200L, text("pa"))).toDF("doc_id", "text"))
+      IngestPipeline.processBatch(
+        Seq((1L, text("pa")), (2L, text("ua"))).toDF("doc_id", "text"),
+        0L, storeDir, protIdx)
+      val out = IngestPipeline.readSurvivors(spark, storeDir)
+        .select("doc_id").collect().map(_.getLong(0)).toSeq
+      assert(out === Seq(2L))
+    }
+  }
 }

@@ -102,6 +102,15 @@ class JdbcEndToEndSpec extends SparkSpec {
     assert(second.length === first.length)
   }
 
+  test("the three passes read each JDBC table once") {
+    db
+    val docs = TrendsJob.docs(JdbcSource.trendsTables(spark, cfg), TrendsJob.Config(
+      Params(sinceDate = FixtureData.D, listId = "LIST", limit = 10), sinkPath = "unused"))
+    docs.collect()
+    assert(DailyPlanSpec.scansByTable(docs) === DailyPlanSpec.tables.map(_ -> 1).toMap,
+      docs.queryExecution.executedPlan)
+  }
+
   test("popularity scan over JDBC: pinned to the day unless week-mode distinct") {
     db
     PopularityScan.assertPins(JdbcSource.trendsTables(spark, cfg),
