@@ -3,8 +3,11 @@ package graft
 import java.nio.file.Files
 import java.sql.DriverManager
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.{EventStreams, IngestPipeline}
 
@@ -24,7 +27,9 @@ import graft.streaming.{EventStreams, IngestPipeline}
  *     dedup-ingest pipeline (batch-internal LSH pairs, stored-index
  *     probe, contamination check, survivor + index-slice writes), after
  *     a corpus bootstrap. The per-batch cost is the O(batch) claim
- *     measured.
+ *     measured; each trigger's progress phases (`addBatch`,
+ *     `queryPlanning`, `walCommit` and the whole trigger) are recorded
+ *     next to its wall time, so a slow batch can be attributed.
  *
  * Methodology mirrors graft.Bench where it applies: wall times around
  * `processAllAvailable()` per injected batch (this is ingestion LATENCY,
@@ -34,12 +39,40 @@ import graft.streaming.{EventStreams, IngestPipeline}
  */
 object StreamBench {
 
+  /** `perBatchMs`: each trigger's progress phases in milliseconds
+    * ([[Phases]]), when the tier records them. */
   final case class Tier(batches: Int, rows: Long, totalSec: Double,
-                        perBatchSec: Seq[Double]) {
+                        perBatchSec: Seq[Double],
+                        perBatchMs: Seq[Map[String, Long]] = Nil) {
     def json: String =
       f"""{"batches":$batches,"rows":$rows,"total_sec":$totalSec%.3f,""" +
         f""""rows_per_sec":${rows / math.max(totalSec, 1e-9)}%.1f,""" +
-        s""""per_batch_sec":[${perBatchSec.map(t => f"$t%.3f").mkString(",")}]}"""
+        s""""per_batch_sec":[${perBatchSec.map(t => f"$t%.3f").mkString(",")}]""" +
+        (if (perBatchMs.isEmpty) "" else
+          s""","per_batch_progress_ms":[${perBatchMs.map(m =>
+            m.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
+            .mkString(",")}]""") + "}"
+  }
+
+  /** The `durationMs` phases of a trigger a tier records. */
+  private val Phases: Seq[String] =
+    Seq("triggerExecution", "addBatch", "queryPlanning", "walCommit")
+
+  /** The [[Phases]] of the trigger that ran batch `batchId` of `q`. A
+    * trigger's progress is published just after its commit, so this
+    * waits for it, up to 5 s; a phase the trigger did not report reads
+    * 0, and a trigger whose progress never arrived reads as no phases. */
+  private def triggerPhases(q: StreamingQuery, batchId: Long): Map[String, Long] = {
+    val until = System.nanoTime() + 5000000000L
+    def progress = q.recentProgress
+      .find(p => p.batchId == batchId && p.durationMs.containsKey("addBatch"))
+    var found = progress
+    while (found.isEmpty && System.nanoTime() < until) {
+      Thread.sleep(2)
+      found = progress
+    }
+    found.fold(Map.empty[String, Long])(p => ListMap(Phases.map(k =>
+      k -> p.durationMs.getOrDefault(k, 0L).longValue): _*))
   }
 
   def resultsJson(tiers: Seq[(String, Tier)], sfDir: String,
@@ -118,14 +151,17 @@ object StreamBench {
       val cp = Files.createTempDirectory("streambench-ingest-cp").toString
       val q = IngestPipeline.startIngest(
         input.toDF().toDF("doc_id", "text"), storeDir, protectedIdx, cp)
-      val times = try chunks.map { c =>
+      // a fresh checkpoint: chunk i is batch i, whose progress phases
+      // are read after its timed wall
+      val (times, phases) = try chunks.zipWithIndex.map { case (c, i) =>
         val t0 = System.nanoTime()
         input.addData(c.toSeq)
         q.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      } finally q.stop()
+        val sec = (System.nanoTime() - t0) / 1e9
+        (sec, triggerPhases(q, i.toLong))
+      }.unzip finally q.stop()
       tiers += "ingest" -> Tier(chunks.length, stream.length.toLong,
-        times.sum, times)
+        times.sum, times, phases)
       System.err.println(s"[stream-bench] ingest ${tiers.last._2.json}")
     }
 

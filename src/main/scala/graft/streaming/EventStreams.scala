@@ -297,18 +297,12 @@ object EventStreams {
         // changed (day, event_type) groups, so overwriting day-level
         // partitions would silently delete the day's untouched event types.
         // With (day, event_type) partitions each overwritten directory is
-        // exactly one emitted group — true upsert granularity.
-        val spark = batch.sparkSession
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          batch.write.mode("overwrite")
-            .partitionBy("day", "event_type")
-            .parquet(path)
-        } finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
+        // exactly one emitted group — true upsert granularity. The
+        // overwrite mode is a writer option: the session's is untouched.
+        batch.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("day", "event_type")
+          .parquet(path)
       }
       .start()
 

@@ -1,8 +1,11 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicBoolean
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery,
+  StreamingQueryListener}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
   StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -91,20 +94,12 @@ object IngestPipeline {
 
   /** ONE dynamic-partition-overwrite commit of a unified multi-tier
     * frame: a replayed batch rewrites exactly the (tier, batch)
-    * partitions it produces. */
-  private def writeTiers(unified: DataFrame, storeDir: String): Unit = {
-    val spark = unified.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try unified.write.mode(SaveMode.Overwrite)
+    * partitions it produces. The overwrite mode is a writer option, so
+    * the session's setting is never touched. */
+  private def writeTiers(unified: DataFrame, storeDir: String): Unit =
+    unified.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(TierCol, BatchCol).parquet(storeDir)
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
 
   /** The frozen protected index of `docs`, built with the shingle size,
     * signature length and banding [[processBatch]] uses: an index built
@@ -423,9 +418,18 @@ object IngestPipeline {
   }
 
   /** Wire a streaming doc frame into the flow. The protected index is
-    * the frozen artifact of the held-out splits — loaded once, never
-    * updated by ingest (its composition is the thing decontamination
-    * protects).
+    * the frozen artifact of the held-out splits — never updated by ingest
+    * (its composition is the thing decontamination protects) — so it
+    * belongs to the query, not to a batch: before the query starts, its
+    * `base` and `bands` frames are persisted and materialized once, one
+    * action each, and every micro-batch's drop-set action reads that copy
+    * instead of deriving the index again (for protected docs held as a
+    * local relation, the optimizer would otherwise re-shingle and re-sign
+    * all of them on the driver every batch). The copy is released when the
+    * query terminates, by `stop()` or by failure: a listener on this
+    * query's run id unpersists it when the termination event arrives,
+    * just after `stop()` returns, and then removes itself. Frames the
+    * caller had already cached are read, never released.
     *
     * `rollupEvery = Some(N)` rolls the index store up every N batches
     * (round-13 verdict item — without it a long-running stream accretes
@@ -445,17 +449,53 @@ object IngestPipeline {
                   threshold: Double = 0.5,
                   rollupEvery: Option[Int] = None): StreamingQuery = {
     rollupEvery.foreach(r => require(r >= 1, s"rollupEvery must be >= 1: $r"))
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, protectedIdx,
-          idCol, textCol, n, k, bands, threshold)
-        if (rollupEvery.exists(r => batchId > 0 && batchId % r == 0))
-          rollupIndexStore(batch.sparkSession, storeDir,
-            sealedBefore = batchId)
-      }
-      .start()
+    // `base` first: a `bands` frame derived from it (as
+    // Dedup.buildMinhashIndex derives it) then fills from the cached
+    // `base` instead of shingling the docs again
+    val frozen = Seq(protectedIdx.base, protectedIdx.bands)
+      .filter(_.storageLevel == StorageLevel.NONE)
+    frozen.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    val released = new AtomicBoolean(false)
+    def release(): Unit =
+      if (released.compareAndSet(false, true))
+        frozen.foreach(_.unpersist(blocking = false))
+    val query = try {
+      frozen.foreach(_.count())
+      docs.writeStream
+        .outputMode(OutputMode.Append())
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          processBatch(batch, batchId, storeDir, protectedIdx,
+            idCol, textCol, n, k, bands, threshold)
+          if (rollupEvery.exists(r => batchId > 0 && batchId % r == 0))
+            rollupIndexStore(batch.sparkSession, storeDir,
+              sealedBefore = batchId)
+        }
+        .start()
+    } catch {
+      case e: Throwable =>
+        release()
+        throw e
+    }
+    val streams = docs.sparkSession.streams
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.runId == query.runId) {
+          streams.removeListener(this)
+          release()
+        }
+    }
+    streams.addListener(listener)
+    // a query that ended before the listener was added posted its
+    // termination event too early for it
+    if (!query.isActive) {
+      streams.removeListener(listener)
+      release()
+    }
+    query
   }
 
   /** All survivors accumulated in the store's `doc` tier, with their

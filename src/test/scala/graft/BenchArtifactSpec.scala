@@ -73,4 +73,21 @@ class BenchArtifactSpec extends AnyFunSuite {
       assert(names === Seq("bench_out.json"))
     }
   }
+
+  test("StreamBench's results carry each trigger's progress phases next to its wall time") {
+    val plain = StreamBench.Tier(2, 10L, 3.0, Seq(1.0, 2.0))
+    val traced = plain.copy(perBatchMs = Seq(
+      Map("addBatch" -> 900L, "walCommit" -> 40L),
+      Map("addBatch" -> 1800L, "walCommit" -> 50L)))
+    val json = parse(StreamBench.resultsJson(
+      Seq("jdbc_upsert" -> plain, "ingest" -> traced), "/sf", partial = false))
+    val tiers = json \ "tiers"
+    val keys = Seq("batches", "rows", "total_sec", "rows_per_sec", "per_batch_sec")
+    assert((tiers \ "jdbc_upsert").asInstanceOf[JObject].obj.map(_._1) === keys)
+    assert((tiers \ "ingest").asInstanceOf[JObject].obj.map(_._1) ===
+      keys :+ "per_batch_progress_ms")
+    assert((tiers \ "ingest" \ "per_batch_progress_ms") === JArray(List(
+      JObject("addBatch" -> JInt(900), "walCommit" -> JInt(40)),
+      JObject("addBatch" -> JInt(1800), "walCommit" -> JInt(50)))))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, udf}
 
 import graft.ops.Dedup
 import graft.streaming.IngestPipeline
@@ -19,6 +20,11 @@ class IngestPipelineSpec extends SparkSpec {
   // LSH recall certain); different families share no bigram (J = 0)
   private def text(fam: String) =
     (1 to 40).map(i => s"$fam$i").mkString(" ")
+
+  private def survivorsOf(storeDir: String): Seq[(Long, Long)] =
+    IngestPipeline.readSurvivors(spark, storeDir)
+      .selectExpr("CAST(ingest_batch AS BIGINT)", "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
   test("stream: internal + cross-corpus + decontamination drops, index update, replay converges") {
     withTempDirs("graft-ingest") { case Seq(tmp) =>
@@ -48,10 +54,7 @@ class IngestPipelineSpec extends SparkSpec {
         q.processAllAvailable()
       } finally q.stop()
 
-      def survivors(): Seq[(Long, Long)] =
-        IngestPipeline.readSurvivors(spark, storeDir)
-          .selectExpr("CAST(ingest_batch AS BIGINT)", "doc_id")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      def survivors(): Seq[(Long, Long)] = survivorsOf(storeDir)
       val expected = Seq((0L, 3L), (0L, 5L), (1L, 7L))
       assert(survivors() === expected)
 
@@ -377,6 +380,94 @@ class IngestPipelineSpec extends SparkSpec {
       val out = IngestPipeline.readSurvivors(spark, storeDir)
         .select("doc_id").collect().map(_.getLong(0)).toSeq
       assert(out === Seq(2L))
+    }
+  }
+
+  test("startIngest builds the protected index once per query, reads it " +
+      "in every batch, and releases it when the query stops") {
+    withTempDirs("graft-frozen", "graft-frozen-lazy") { case Seq(tmp, lazyTmp) =>
+      implicit val sqlCtx = spark.sqlContext
+      // counts every evaluation of the protected docs' text: a local
+      // relation's projection is evaluated on the driver by the optimizer
+      val reads = spark.sparkContext.longAccumulator("protected text reads")
+      val counted = udf { (t: String) => reads.add(1); t }
+      val protIdx = IngestPipeline.protectedIndex(
+        Seq((200L, text("pa")), (201L, text("pb"))).toDF("doc_id", "raw")
+          .select(col("doc_id"), counted(col("raw")).as("text")))
+      val batches = Seq(
+        Seq((1L, text("pa")), (2L, text("ua")), (3L, text("ca"))),
+        Seq((4L, text("pb")), (5L, text("ua")), (6L, text("va"))),
+        Seq((7L, text("wa")), (8L, text("wa"))))
+      Seq(tmp, lazyTmp).foreach(d => IngestPipeline.writeIndexSlice(
+        Seq((100L, text("ca"))).toDF("doc_id", "text"), s"$d/store",
+        IngestPipeline.CorpusBatchId))
+
+      val sc = spark.sparkContext
+      val cachedBefore = sc.getPersistentRDDs.keySet
+      val listenersBefore = spark.streams.listListeners().length
+      val mem = MemoryStream[(Long, String)]
+      val q = IngestPipeline.startIngest(mem.toDF().toDF("doc_id", "text"),
+        s"$tmp/store", protIdx, s"$tmp/chk")
+      try {
+        assert(reads.value === 2, "the query start reads each protected doc once")
+        assert(sc.getPersistentRDDs.size === cachedBefore.size + 2,
+          "the query start persists the index's base and bands")
+        batches.foreach { b =>
+          mem.addData(b: _*)
+          q.processAllAvailable()
+        }
+        assert(reads.value === 2, "a micro-batch derived the protected index again")
+      } finally q.stop()
+      // released once the termination event reaches the query's listener
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def released = sc.getPersistentRDDs.keySet == cachedBefore &&
+        spark.streams.listListeners().length == listenersBefore
+      while (!released && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sc.getPersistentRDDs.keySet === cachedBefore,
+        "the protected index outlived its query")
+      assert(spark.streams.listListeners().length === listenersBefore,
+        "the query's listener outlived it")
+
+      // the same index, now lazy again, on the same batches: the same
+      // drops, and the protected docs are read again in every batch
+      batches.zipWithIndex.foreach { case (b, i) =>
+        val before = reads.value
+        IngestPipeline.processBatch(b.toDF("doc_id", "text"), i.toLong,
+          s"$lazyTmp/store", protIdx)
+        assert(reads.value > before, s"lazy batch $i read no protected doc")
+      }
+      val expected = Seq((0L, 2L), (1L, 6L), (2L, 7L))
+      assert(survivorsOf(s"$tmp/store") === expected)
+      assert(survivorsOf(s"$lazyTmp/store") === expected)
+    }
+  }
+
+  test("with the session's overwrite mode static, a batch replaces only " +
+      "its own store partitions and leaves the session setting as it was") {
+    withTempDirs("graft-static") { case Seq(tmp) =>
+      val key = "spark.sql.sources.partitionOverwriteMode"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "static")
+      try {
+        val storeDir = s"$tmp/store"
+        IngestPipeline.writeIndexSlice(
+          Seq((100L, text("ca"))).toDF("doc_id", "text"),
+          storeDir, IngestPipeline.CorpusBatchId)
+        val protIdx = IngestPipeline.protectedIndex(
+          Seq((200L, text("pa"))).toDF("doc_id", "text"))
+        def run(batchId: Long, rows: (Long, String)*): Unit =
+          IngestPipeline.processBatch(rows.toDF("doc_id", "text"), batchId,
+            storeDir, protIdx)
+        run(0L, (1L, text("xa")), (2L, text("ya")))
+        run(1L, (3L, text("za")))
+        // batch 1 again, with other docs: only its partitions change
+        run(1L, (4L, text("wa")))
+        assert(survivorsOf(storeDir) === Seq((0L, 1L), (0L, 2L), (1L, 4L)))
+        assert(IngestPipeline.readIndexBefore(spark, storeDir, Long.MaxValue)
+          .base.select("id").collect().map(_.getLong(0)).toSet ===
+          Set(100L, 1L, 2L, 4L))
+        assert(spark.conf.get(key) === "static")
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
 }
