@@ -5,6 +5,7 @@ import java.sql.DriverManager
 
 import scala.collection.immutable.ListMap
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -88,9 +89,24 @@ object StreamBench {
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "5").toInt
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // checkpoints and the ingest store, deleted when main exits
+    val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def tempDir(prefix: String): String = {
+      val d = Files.createTempDirectory(prefix)
+      tempDirs += d
+      d.toString
+    }
+    try run(spark, sfDir, out, nBatches, tempDir)
+    finally {
+      spark.stop()
+      tempDirs.foreach(Artifacts.deleteRecursively)
+    }
+  }
+
+  private def run(spark: SparkSession, sfDir: String, out: String,
+                  nBatches: Int, tempDir: String => String): Unit = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
     val tiers = scala.collection.mutable.ArrayBuffer.empty[(String, Tier)]
     def flush(partial: Boolean): Unit =
       Bench.flush(out, resultsJson(tiers.toSeq, sfDir, partial))
@@ -114,7 +130,7 @@ object StreamBench {
       val chunks = events.grouped(
         math.max(1, events.length / nBatches)).toSeq
       val input = MemoryStream[EventStreams.Event]
-      val cp = Files.createTempDirectory("streambench-jdbc-cp").toString
+      val cp = tempDir("streambench-jdbc-cp")
       val q = EventStreams.writeDailyUpsertJdbc(
         EventStreams.dailyCounts(input.toDF(), lateness = "1 hour"),
         url, "daily_counts", cp)
@@ -132,7 +148,7 @@ object StreamBench {
 
     // ---- tier 2: dedup ingest pipeline --------------------------------
     {
-      val root = Files.createTempDirectory("streambench-ingest").toString
+      val root = tempDir("streambench-ingest")
       val storeDir = s"$root/store"
       val docs = Tables.documents(spark, sfDir)
         .orderBy(col("doc_id"))
@@ -148,7 +164,7 @@ object StreamBench {
       val chunks = stream.grouped(
         math.max(1, stream.length / nBatches)).toSeq
       val input = MemoryStream[(Long, String)]
-      val cp = Files.createTempDirectory("streambench-ingest-cp").toString
+      val cp = tempDir("streambench-ingest-cp")
       val q = IngestPipeline.startIngest(
         input.toDF().toDF("doc_id", "text"), storeDir, protectedIdx, cp)
       // a fresh checkpoint: chunk i is batch i, whose progress phases
@@ -167,6 +183,5 @@ object StreamBench {
 
     flush(partial = false)
     println(resultsJson(tiers.toSeq, sfDir, partial = false))
-    spark.stop()
   }
 }

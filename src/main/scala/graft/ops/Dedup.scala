@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -352,11 +352,22 @@ object Dedup {
    *    where the ids differ (a re-ingested id is not its own duplicate —
    *    the pairs of [[lshPairsAgainst]]).
    *
-   * Candidates are distinct (new_id, tier, ref_id) triples, verified with
-   * one join against the tagged union of the tiers' `base` tables keyed by
-   * (tier, id): ids may repeat across tiers, and each candidate is checked
-   * against the text of the tier it collided in. Reference rows that
-   * repeat (a roll-up's duplicate window) change no verdict.
+   * Each candidate (new_id, tier, ref_id) is verified where the band join
+   * finds it, with one join against the tagged union of the tiers' `base`
+   * tables keyed by (tier, id): ids may repeat across tiers, and each
+   * candidate is checked against the text of the tier it collided in.
+   * Repeats are dropped only within a partition
+   * ([[distinctWithinPartitions]]), never across one, so the probe needs
+   * no shuffle: when the batch tables and the reference `base` union are
+   * small enough to broadcast, the plan is broadcast joins streaming the
+   * stored bands. A pair collides in up to one row per band, and a doc's
+   * band rows sit in one partition, so the candidates are deduplicated
+   * before the verify join, which then checks a pair once per partition
+   * rather than once per colliding band. The result holds the dropped
+   * ids, POSSIBLY REPEATED: at most once per partition (a reference row
+   * stored twice, as in a roll-up's duplicate window, may sit in another
+   * partition), so it has at most `batchRows` distinct ids and at most
+   * `batchRows` × its partition count rows. The caller dedupes them.
    *
    * Tier 0 keeps [[lshPairsWithin]]'s bucket cap. Each doc has one row per
    * band index, so a bucket of a `batchRows`-row batch holds at most
@@ -379,21 +390,27 @@ object Dedup {
       col("band_idx"), col("band_hash"))
     val refBase = tagged(Seq(batch.base, corpus.base, protectedIdx.base),
       col("ih").as("ih_b"), col("sz").as("sz_b"))
-    val candidates = batch.bands
+    val candidates = distinctWithinPartitions(batch.bands
       .select(col("id").as("new_id"), col("band_idx"), col("band_hash"))
       .join(refBands, Seq("band_idx", "band_hash"))
       .filter(when(col("tier") === 0, col("ref_id") < col("new_id"))
         .otherwise(col("ref_id") =!= col("new_id")))
-      .select(col("new_id"), col("tier"), col("ref_id"))
-      .dropDuplicates("new_id", "tier", "ref_id")
+      .select(col("new_id"), col("tier"), col("ref_id")))
     val newBase = batch.base.select(col("id").as("new_id"),
       col("ih").as("ih_a"), col("sz").as("sz_a"))
-    jaccardAtLeast(
+    distinctWithinPartitions(jaccardAtLeast(
       candidates.join(newBase, "new_id").join(refBase, Seq("tier", "ref_id")),
       threshold)
-      .select(col("new_id"))
-      .distinct()
+      .select(col("new_id")))
   }
+
+  /** `df` with each row kept once per partition: no shuffle, no job, and
+    * a partition's set of distinct rows held while it streams. */
+  private def distinctWithinPartitions(df: DataFrame): DataFrame =
+    df.mapPartitions { rows =>
+      val seen = new java.util.HashSet[Row]
+      rows.filter(seen.add)
+    }(Encoders.row(df.schema))
 
   // ------------------------------------------------------------- SimHash
 

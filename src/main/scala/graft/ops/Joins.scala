@@ -8,52 +8,6 @@ import org.apache.spark.sql.functions._
 object Joins {
 
   /**
-   * SQL-faithful NOT IN as an anti join (SURVEY §7.4 trap #1): plain
-   * `left_anti` keeps left rows whose key is NULL and ignores NULL keys on
-   * the right, but SQL `x NOT IN (subquery)` excludes NULL-keyed left rows
-   * and returns ZERO rows if the subquery yields any NULL.
-   *
-   * Catalyst's own NOT-IN rewrite is the anti-join condition
-   * `k = r OR isnull(k = r)` — the isnull leg is true when either side is
-   * NULL, which reproduces both three-valued-logic behaviors. The OR makes
-   * this a nested-loop join, so the right side should be small (it is a
-   * deleted-members key list in the reference — trends.go:313-320); for a
-   * big right side use [[notInFaithfulBig]].
-   */
-  def notInFaithful(left: DataFrame, right: DataFrame,
-                    leftKey: Column, rightKey: Column): DataFrame =
-    left.join(broadcast(right),
-      leftKey === rightKey || (leftKey === rightKey).isNull,
-      "left_anti")
-
-  /**
-   * The same SQL NOT-IN semantics for a BIG right side — no broadcast, no
-   * nested-loop: the three-valued-logic cases are decided by a 1-row
-   * aggregate of the right side (broadcast-joined to every left row), and
-   * the remaining membership test is a plain equality LEFT ANTI that
-   * Catalyst plans as a scalable shuffle join:
-   *  - right side has any NULL key → NOT IN is never true → zero rows;
-   *  - right side empty            → NOT IN is vacuously true → left as-is;
-   *  - otherwise                   → drop NULL-keyed left rows (NULL NOT IN
-   *    (non-empty) is NULL), anti-join the rest on equality.
-   * Equivalence with [[notInFaithful]] and SQL `NOT IN` is proven in
-   * NullSemanticsSpec for nullable keys on both sides and the empty right.
-   */
-  def notInFaithfulBig(left: DataFrame, right: DataFrame,
-                       leftKey: Column, rightKey: Column): DataFrame = {
-    val stats = right.agg(
-      count(lit(1)).as("__nin_n"),
-      count(when(rightKey.isNull, lit(1))).as("__nin_nulls"))
-    val keys = right.select(rightKey.as("__nin_k"))
-      .filter(col("__nin_k").isNotNull).distinct()
-    left.crossJoin(broadcast(stats))
-      .filter(col("__nin_nulls") === 0 &&
-        (col("__nin_n") === 0 || leftKey.isNotNull))
-      .drop("__nin_n", "__nin_nulls")
-      .join(keys, leftKey === col("__nin_k"), "left_anti")
-  }
-
-  /**
    * General AS-OF join — each left row picks up the payload of the LATEST
    * right row with the same key and right.time ≤ left.time (inclusive),
    * NULL payload if none — WITHOUT an inequality join: both sides are

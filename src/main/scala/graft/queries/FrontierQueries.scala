@@ -7,6 +7,7 @@ import graft.{Artifacts, Tables}
 import graft.ops.{Agreement, BitmapIndex, CountMin, GlobalIndex,
   RecordLinkage, Robust, Skyline, Spearman, WeightedSample}
 import graft.plans.{ConstraintCatalog, PkFkJoinElimination}
+import graft.sources.DeclaredParquet
 
 /**
  * Round-9 tier (q200-q209): the optimizer / storage / statistics
@@ -34,7 +35,7 @@ object FrontierQueries {
     PkFkJoinElimination.install(spark)
     val c = Tables.customer(spark, dir)
     // dim side: bare scan (no spread) — the eliminable shape BI tools emit
-    val n = spark.read.parquet(s"$dir/nation.parquet")
+    val n = DeclaredParquet.readInferred(spark, s"$dir/nation.parquet")
     c.join(n, c("c_nationkey") === n("n_nationkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_cust"),
@@ -587,7 +588,7 @@ object FrontierQueries {
     ConstraintCatalog.declareUnique("c_custkey")
     PkFkJoinElimination.install(spark)
     val o = Tables.orders(spark, dir)
-    val c = spark.read.parquet(s"$dir/customer.parquet")
+    val c = DeclaredParquet.readInferred(spark, s"$dir/customer.parquet")
     o.join(c, o("o_custkey") === c("c_custkey"), "left_outer")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"),

@@ -91,15 +91,21 @@ object HighlightQueries {
       max(deleted && tid.isNull).as("del_tid_null"))
   }
 
-  /** `key NOT IN (deleted-member keys)` with SQL's three-valued logic
-    * (F7/F8, the semantics of Joins.notInFaithful) over the [[dims]] row:
-    * an empty key list keeps every row; otherwise a NULL key, or a NULL in
-    * the list, keeps none. */
+  /** `key NOT IN (deleted-member keys)` (F7/F8) over the [[dims]] row,
+    * through [[notIn]]. DailyPlanSpec's NULL-key case runs it on the daily
+    * job's tables. */
   private def notDeleted(p: Params, key: Column, keys: String,
                          hasNull: String): Column =
     if (!p.excludeDeletedMembers) lit(true)
-    else col("del_n") === 0 ||
-      (key.isNotNull && !col(hasNull) && !array_contains(col(keys), key))
+    else notIn(key, col("del_n"), col(keys), col(hasNull))
+
+  /** `key NOT IN (list)` with SQL's three-valued logic, the list given as
+    * its size, its non-NULL keys and whether it holds a NULL: an empty
+    * list keeps every row; otherwise a NULL key, or a NULL in the list,
+    * keeps none. NullSemanticsSpec checks it against Spark SQL's NOT IN. */
+  private[graft] def notIn(key: Column, size: Column, keys: Column,
+                           hasNull: Column): Column =
+    size === 0 || (key.isNotNull && !hasNull && !array_contains(keys, key))
 
   private def isTrue(c: Column): Column = coalesce(c, lit(false))
 

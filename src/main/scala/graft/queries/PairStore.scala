@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.{Artifacts, Tables}
 import graft.ops.Dedup
+import graft.sources.DeclaredParquet
 
 /**
  * The STANDARD near-dup pair table (bigram MinHash-LSH, k=64/bands=16,
@@ -25,7 +26,7 @@ object PairStore {
 
   /** The standard pair table (id_a < id_b, exact jaccard). */
   def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(Artifacts.stored(spark, "pairs",
+    DeclaredParquet.readInferred(spark, Artifacts.stored(spark, "pairs",
         Seq(Tables.path(dir, "documents"))) { out =>
       val pairs = Dedup.minhashLshPairs(Tables.documents(spark, dir),
         "doc_id", "text", n = 2, k = 64, bands = 16, threshold = 0.5)

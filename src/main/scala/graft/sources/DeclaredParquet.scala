@@ -69,6 +69,14 @@ object DeclaredParquet {
         .getOrElse(converter(spark).convert(footer.getSchema))
     }
 
+  /** `spark.read.parquet(path)` with the schema of [[inferredSchema]]: the
+    * same frame, read with no inference job. A path with no data file is
+    * read plainly, so it raises Spark's own error (a missing path, or no
+    * schema to infer). */
+  def readInferred(spark: SparkSession, path: String): DataFrame =
+    inferredSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
   private def converter(spark: SparkSession) =
     new ParquetToSparkSchemaConverter(spark.sessionState.conf)
 

@@ -31,8 +31,8 @@ import graft.sources.DeclaredParquet
  *     → ONE multi-tier store write: survivors (tier `doc`) AND their
  *       signatures (tiers `bands`/`base` — the index-UPDATE step: batch
  *       b+1 dedups against batch b's survivors) land in a single
- *       partitioned commit, filtered by a broadcast anti join against
- *       the collected drop ids.
+ *       partitioned commit, filtered against the collected drop ids
+ *       through a broadcast variable (no join, no extra job).
  *
  * Store layout (single root, one write action per micro-batch — round 12
  * collapsed the previous three separate dynamic-partition writes, which
@@ -93,11 +93,18 @@ object IngestPipeline {
   }
 
   /** ONE dynamic-partition-overwrite commit of a unified multi-tier
-    * frame: a replayed batch rewrites exactly the (tier, batch)
-    * partitions it produces. The overwrite mode is a writer option, so
-    * the session's setting is never touched. */
-  private def writeTiers(unified: DataFrame, storeDir: String): Unit =
-    unified.write.mode(SaveMode.Overwrite)
+    * frame as batch `batchId`: a replayed batch rewrites exactly the
+    * (tier, batch) partitions it produces. The overwrite mode is a writer
+    * option, so the session's setting is never touched. The batch id is
+    * written as a string: the partition dir is the same `ingest_batch=<id>`
+    * (readers infer its type from the name), but a LONG literal is inlined
+    * into the generated code, so every batch would compile its write
+    * stages anew, where a string literal is a reference and the compiled
+    * code is reused. */
+  private def writeTiers(unified: DataFrame, batchId: Long,
+                         storeDir: String): Unit =
+    unified.withColumn(BatchCol, lit(batchId.toString))
+      .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(TierCol, BatchCol).parquet(storeDir)
 
@@ -141,8 +148,8 @@ object IngestPipeline {
       val docSchema = docs.limit(0).withColumn(TierCol, lit("doc"))
       writeTiers(docSchema
         .unionByName(bandsTier(idx), allowMissingColumns = true)
-        .unionByName(baseTier(idx), allowMissingColumns = true)
-        .withColumn(BatchCol, lit(batchId)), storeDir)
+        .unionByName(baseTier(idx), allowMissingColumns = true),
+        batchId, storeDir)
     }
   }
 
@@ -205,19 +212,31 @@ object IngestPipeline {
    *  - cross-corpus: any doc with a near-dup in the stored train index;
    *  - contamination: any doc with a near-dup in the protected index.
    *
-   * A batch runs a fixed handful of jobs, whatever the store holds:
+   * A batch runs a fixed handful of jobs, whatever the store holds (6 for
+   * a 50-doc batch against a broadcastable store):
    *  1. the batch's hashed shingle sets and MinHash signatures are staged
-   *     once; the `count` that materializes them also ends an empty batch;
+   *     once and materialized by ONE job, the count of the staged frame's
+   *     RDD (`Dataset.count` plans a cache stage and a two-stage aggregate,
+   *     3 jobs); that count also ends an empty batch;
    *  2. one action collects the drop set — [[Dedup.lshDropIds]], one tagged
    *     band join of the batch against itself, the stored index
-   *     (`ingest_batch < batchId`) and the protected index — on the
-   *     driver: at most one id per batch doc;
+   *     (`ingest_batch < batchId`) and the protected index, with no
+   *     shuffle when its small sides broadcast. The probe drops repeated
+   *     ids within each partition, so the driver receives at most
+   *     `rows` × the probe's partition count ids, however often a doc
+   *     collides, and dedupes them into at most `rows`;
    *  3. ONE store commit writes the survivors and their signatures (the
-   *     index-UPDATE step that makes batch b+1 see batch b), each tier
-   *     filtered by a broadcast anti join against the drop ids, held as a
-   *     local relation: one small broadcast job, and no per-id literal in
-   *     the plan or its tasks, however large the batch. The doc tier comes
-   *     from `batch`, the `base` and `bands` tiers from the staged frame.
+   *     index-UPDATE step that makes batch b+1 see batch b). Each tier is
+   *     filtered by a predicate reading the drop ids from a broadcast
+   *     variable, the ids compared as strings so every id type takes one
+   *     path: no job, and a plan whose size does not grow with the drop
+   *     set. Null ids are kept, as no drop rule can match them; an empty
+   *     drop set adds no filter. The doc tier comes from `batch`, the
+   *     `base` and `bands` tiers from the staged frame. The broadcast is
+   *     destroyed once the commit returns (its blocks go asynchronously).
+   *
+   * No step puts the batch id or the drop ids into generated code, so a
+   * batch reuses the classes its predecessors compiled ([[writeTiers]]).
    */
   def processBatch(batch: DataFrame, batchId: Long,
                    storeDir: String, protectedIdx: MinhashIndex,
@@ -229,25 +248,29 @@ object IngestPipeline {
       .withColumn("sig", Dedup.minhashSignature(col("ih"), k))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val rows = staged.count()
+      val rows = staged.rdd.count()
       if (rows == 0) return
       val spark = batch.sparkSession
       val batchIdx = MinhashIndex(Dedup.signatureBands(staged, k, bands),
         staged.select(col("id"), col("ih"), col("sz")))
       val corpusIdx = readIndexBefore(spark, storeDir, beforeId = batchId)
       val dropIds = Dedup.lshDropIds(batchIdx, corpusIdx, protectedIdx,
-        threshold, rows)
-      val drops = broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(dropIds.collect(): _*), dropIds.schema))
-      // an anti join keeps null ids: no drop rule can match them
+        threshold, rows).select(col("new_id").cast("string"))
+        .collect().map(_.getString(0)).toSet
+      val drops =
+        Option.when(dropIds.nonEmpty)(spark.sparkContext.broadcast(dropIds))
+      // a NULL id reaches the predicate as null, which no drop set holds
+      val kept = drops.map(d => udf((id: String) => !d.value.contains(id)))
       def survivors(df: DataFrame, id: String) =
-        df.join(drops, df(id) === drops("new_id"), "left_anti")
-      val survIdx = MinhashIndex(survivors(batchIdx.bands, "id"),
-        survivors(batchIdx.base, "id"))
-      writeTiers(survivors(batch, idCol).withColumn(TierCol, lit("doc"))
-        .unionByName(bandsTier(survIdx), allowMissingColumns = true)
-        .unionByName(baseTier(survIdx), allowMissingColumns = true)
-        .withColumn(BatchCol, lit(batchId)), storeDir)
+        kept.fold(df)(k => df.filter(k(df(id).cast("string"))))
+      try {
+        val survIdx = MinhashIndex(survivors(batchIdx.bands, "id"),
+          survivors(batchIdx.base, "id"))
+        writeTiers(survivors(batch, idCol).withColumn(TierCol, lit("doc"))
+          .unionByName(bandsTier(survIdx), allowMissingColumns = true)
+          .unionByName(baseTier(survIdx), allowMissingColumns = true),
+          batchId, storeDir)
+      } finally drops.foreach(_.destroy())
     } finally staged.unpersist(blocking = false)
   }
 
@@ -302,10 +325,10 @@ object IngestPipeline {
    * INSTALLS the staged files under the fresh label FIRST and deletes
    * the sealed dirs LAST. Every intermediate state shows a reader
    * duplicates, never absences — and the pipeline's own consumers are
-   * duplicate-insensitive by construction (in
-   * [[graft.ops.Dedup.lshDropIds]] candidates are `dropDuplicates` and
-   * the drop set `distinct`, and the verify join per candidate yields
-   * identical verdict rows for duplicate base rows).
+   * duplicate-insensitive by construction ([[graft.ops.Dedup.lshDropIds]]
+   * verifies every candidate copy alone, so a duplicate band or base row
+   * only repeats an id in the drop set, which [[processBatch]] dedupes on
+   * the driver).
    *
    * Crash safety + SELF-HEALING: a crash before `_LABEL` leaves only
    * staging residue (deleted at next entry); a crash between install
@@ -500,9 +523,8 @@ object IngestPipeline {
 
   /** All survivors accumulated in the store's `doc` tier, with their
     * batch ids (user doc columns + `ingest_batch`). */
-  def readSurvivors(spark: SparkSession, storeDir: String): DataFrame = {
-    val doc = spark.read.parquet(storeDir)
+  def readSurvivors(spark: SparkSession, storeDir: String): DataFrame =
+    DeclaredParquet.readInferred(spark, storeDir)
       .filter(col(TierCol) === "doc")
-    doc.drop(TierCol).drop(IdxCols: _*)
-  }
+      .drop(TierCol).drop(IdxCols: _*)
 }
